@@ -48,6 +48,42 @@ object SparkEntry {
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
   private def embs(s: SparkSession, d: String) = Tables.embeddings(s, d)
 
+  private def md5hex(sIn: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(sIn.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(16)
+
+  /** The frozen per-dataset index contract of the *_admit_indexed
+    * keys: the index is a prior artifact, built once per SF dir, not
+    * per-run work (the q_incremental_topk state convention). `idx` is
+    * a STABLE name per dataset dir (md5 of the source file's
+    * canonical path — survives regeneration, one index dir per SF
+    * tier, bounded growth); a _FINGERPRINT file carries the content
+    * key, an md5 of the source FILE (path + size + mtime), so a
+    * regenerated corpus mismatches it and `write` rebuilds IN PLACE.
+    * The `_COMPLETE` marker is deleted before and written only AFTER
+    * `write` and the fingerprint succeed, so a crash mid-write never
+    * leaves a half-index that passes the check (the writers
+    * overwrite, so a rebuild over a torn index is safe). */
+  private def frozenIndex(src: java.io.File, idx: String)
+                         (write: => Unit): Unit = {
+    val fp = md5hex(src.getCanonicalPath + ":" + src.length +
+      ":" + src.lastModified)
+    val marker = new java.io.File(idx, "_COMPLETE")
+    val fpFile = new java.io.File(idx, "_FINGERPRINT")
+    val storedFp =
+      if (fpFile.exists())
+        Some(new String(java.nio.file.Files.readAllBytes(
+          fpFile.toPath), "UTF-8").trim)
+      else None
+    if (!marker.exists() || !storedFp.contains(fp)) {
+      if (marker.exists()) marker.delete()
+      write
+      java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
+      marker.createNewFile()
+    }
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
@@ -242,7 +278,7 @@ object SparkEntry {
     "q_band_join" -> ((s, d) =>
       Relational.qBandJoin(s, d).orderBy("nation")),
     // partition-pruned band admission over a frozen per-SF index
-    // (the dedup/emb_admit_indexed fingerprint/marker contract):
+    // ([[frozenIndex]]):
     // peers = suppkey % 10 != 0, wave = the rest; the index dirs are
     // 64-band blocks and the probe reads only the wave's blocks
     "q_band_admit_indexed" -> ((s, d) => {
@@ -255,27 +291,9 @@ object SparkEntry {
       val peers = sup.filter(col("id") % 10 =!= 0)
       val wave = sup.filter(col("id") % 10 === 0)
       val srcFile = new java.io.File(d, "supplier.parquet")
-      def md5hex(sIn: String): String =
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(sIn.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
-      val fp = md5hex(srcFile.getCanonicalPath + ":" + srcFile.length +
-        ":" + srcFile.lastModified)
       val idx = s"/root/repo/target/band_gate_idx_p" +
         md5hex(srcFile.getCanonicalPath)
-      val marker = new java.io.File(idx, "_COMPLETE")
-      val fpFile = new java.io.File(idx, "_FINGERPRINT")
-      def storedFp: Option[String] =
-        if (fpFile.exists())
-          Some(new String(java.nio.file.Files.readAllBytes(
-            fpFile.toPath), "UTF-8").trim)
-        else None
-      if (!marker.exists() || !storedFp.contains(fp)) {
-        if (marker.exists()) marker.delete()
-        Relational.bandWriteIndex(peers, idx)
-        java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-        marker.createNewFile()
-      }
+      frozenIndex(srcFile, idx)(Relational.bandWriteIndex(peers, idx))
       Relational.bandAdmitIndexed(s, idx, wave).orderBy("id")
     }),
     // result is already the deterministic top-k; tail re-sort only
@@ -981,41 +999,13 @@ object SparkEntry {
         .select("doc_id", "text")
       val wave = dd.filter(col("source").isin(srcs: _*))
         .select("doc_id", "text")
-      // corpus-keyed frozen index, built once per SF dir (the
-      // ingest contract: the index is a prior artifact, not per-run
-      // work — same convention as the q_incremental_topk state).
-      // Keyed by an md5 fingerprint of the corpus FILE (path + size
-      // + mtime), not the dir string's 32-bit hashCode: regenerated
-      // testdata under the same dir must rebuild, and distinct dirs
-      // must never collide. A `_COMPLETE` marker written AFTER both
-      // postings and sets succeed gates reuse — a crash between the
-      // two writes must not leave a half-index that passes the check
-      // (minhashWriteIndex overwrites, so a rebuild over a torn
-      // index is safe).
-      // STABLE name per dataset dir (md5 of the canonical path —
-      // survives regeneration, one index dir per SF tier, bounded
-      // growth) + a _FINGERPRINT file carrying the content key
-      // (size + mtime): a regenerated corpus mismatches the stored
-      // fingerprint and rebuilds IN PLACE instead of accreting a
-      // new fp-named sibling every round. Legacy fp-/hashCode-named
-      // dirs (no 'p' prefix) are GC'd on any rebuild.
+      // corpus-keyed frozen index ([[frozenIndex]]); legacy
+      // fp-/hashCode-named dirs (no 'p' prefix) are GC'd on any
+      // rebuild
       val srcFile = new java.io.File(d, "documents.parquet")
-      def md5hex(sIn: String): String =
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(sIn.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
-      val fp = md5hex(srcFile.getCanonicalPath + ":" + srcFile.length +
-        ":" + srcFile.lastModified)
       val idx = s"/root/repo/target/mh_gate_idx_p" +
         md5hex(srcFile.getCanonicalPath)
-      val marker = new java.io.File(idx, "_COMPLETE")
-      val fpFile = new java.io.File(idx, "_FINGERPRINT")
-      def storedFp: Option[String] =
-        if (fpFile.exists())
-          Some(new String(java.nio.file.Files.readAllBytes(
-            fpFile.toPath), "UTF-8").trim)
-        else None
-      if (!marker.exists() || !storedFp.contains(fp)) {
+      frozenIndex(srcFile, idx) {
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
           f.delete()
@@ -1026,10 +1016,7 @@ object SparkEntry {
             f.getName.startsWith("mh_gate_idx_") &&
             !f.getName.startsWith("mh_gate_idx_p"))
           .foreach(rm)
-        if (marker.exists()) marker.delete()
         Dedup.minhashWriteIndex(corpus, idx, auditable = true)
-        java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-        marker.createNewFile()
       }
       Dedup.minhashAdmitIndexed(s, idx, wave, auditable = true)
         .orderBy("doc_id")
@@ -1043,34 +1030,14 @@ object SparkEntry {
         .select("vec_id", "embedding")
       val wave = e.filter(col("vec_id") % 10 === 0)
         .select("vec_id", "embedding")
-      // frozen per-SF IVF index, the dedup_admit_indexed
-      // fingerprint/marker contract verbatim (stable p-name per
-      // dataset, content fingerprint, complete-marker after the
-      // write); iters = 0 keeps the centroids at the auditable
-      // vec_id < nlist init so the DuckDB oracle re-derives the
-      // identical assignment
+      // frozen per-SF IVF index ([[frozenIndex]]); iters = 0 keeps
+      // the centroids at the auditable vec_id < nlist init so the
+      // DuckDB oracle re-derives the identical assignment
       val srcFile = new java.io.File(d, "embeddings.parquet")
-      def md5hex(sIn: String): String =
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(sIn.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(16)
-      val fp = md5hex(srcFile.getCanonicalPath + ":" + srcFile.length +
-        ":" + srcFile.lastModified)
       val idx = s"/root/repo/target/ivf_gate_idx_p" +
         md5hex(srcFile.getCanonicalPath)
-      val marker = new java.io.File(idx, "_COMPLETE")
-      val fpFile = new java.io.File(idx, "_FINGERPRINT")
-      def storedFp: Option[String] =
-        if (fpFile.exists())
-          Some(new String(java.nio.file.Files.readAllBytes(
-            fpFile.toPath), "UTF-8").trim)
-        else None
-      if (!marker.exists() || !storedFp.contains(fp)) {
-        if (marker.exists()) marker.delete()
-        Similarity.ivfWriteIndex(corpus, idx, nlist = 16, iters = 0)
-        java.nio.file.Files.write(fpFile.toPath, fp.getBytes("UTF-8"))
-        marker.createNewFile()
-      }
+      frozenIndex(srcFile, idx)(
+        Similarity.ivfWriteIndex(corpus, idx, nlist = 16, iters = 0))
       Dedup.embeddingAdmitIndexed(s, idx, wave, minCosine = 0.4)
         .orderBy("vec_id")
     }),

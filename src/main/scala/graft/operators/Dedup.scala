@@ -920,9 +920,7 @@ object Dedup {
     * operators" rule gives way; non-convergence within maxIter
     * throws (partial labels would silently corrupt clusters). */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
-                          maxIter: Int = 20,
-                          driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
+                          maxIter: Int = 20): DataFrame = {
     // ids normalize to long up front: the driver fast path reads
     // getLong and an int-typed caller would otherwise hit a
     // size-dependent ClassCastException only under the cutoff
@@ -944,7 +942,7 @@ object Dedup {
     // the outputs are byte-equal (spec-pinned); above the cutoff —
     // billions of pairs at 100 TB — the distributed path-halving
     // loop runs unchanged.
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.pairRows)) {
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x

@@ -24,6 +24,7 @@ import scala.collection.mutable
   *     different SF dirs scan different files → different hashes)
   *     with the operator params. Same key ⇒ same frame by
   *     construction, so reuse cannot change any gated result.
+  *     Keys also carry the [[DriverCutoff]] budget in force.
   *   - Entries hold the localCheckpointed frame plus the persistent
   *     RDD ids its build created (before/after snapshot of
   *     `sc.getPersistentRDDs` — sound because queries run serially
@@ -40,7 +41,7 @@ import scala.collection.mutable
   *     backstop, not a working limit).
   */
 object FrameCache {
-  private final case class Entry(df: DataFrame, rddIds: Set[Int],
+  private final case class Entry(value: Any, rddIds: Set[Int],
                                  ctxId: Int)
   private val entries = mutable.LinkedHashMap.empty[String, Entry]
   // r12 widened the shared-frame families (dedup pair/label frames,
@@ -79,8 +80,9 @@ object FrameCache {
         live.get(id).foreach(_.unpersist(blocking = false)))
     }
 
-  /** Memoized build: returns the cached frame for `key` when its
-    * blocks are still live in `spark`'s context, else (re)builds.
+  /** Memoized build: returns the cached frame for `baseKey` (under
+    * the driver budget in force) when its blocks are still live in
+    * `spark`'s context, else (re)builds.
     * `build` MUST return a localCheckpointed (or otherwise
     * persisted) frame — the cache protects blocks, it does not
     * persist plans.
@@ -91,22 +93,28 @@ object FrameCache {
     * frame); those blocks are dead once the final frame
     * materializes, so they are unpersisted here rather than pinned
     * for the cache's lifetime — RDD ids are monotone, so the final
-    * checkpoint is exactly the max created persistent id. */
-  def cached(spark: SparkSession, key: String,
-             keepOnlyLast: Boolean = false)
-            (build: => DataFrame): DataFrame = synchronized {
+    * checkpoint is exactly the max created persistent id.
+    *
+    * A scalar derived from cached frames (a size probe's answer) may
+    * be memoized the same way; it owns no blocks. */
+  def cached[T](spark: SparkSession, baseKey: String,
+                keepOnlyLast: Boolean = false)
+               (build: => T): T = synchronized {
     // measurement kill-switch (scaling probes time the UNSHARED
     // per-key cost to quantify what the cache saves): every call
     // builds, nothing is retained
     if (sys.env.contains("SPARK_GRAFT_FRAMECACHE_OFF")) return build
+    // a frame built under one driver budget may embed that budget's
+    // route; a call forced onto the other route must not reuse it
+    val key = s"$baseKey@${DriverCutoff.budget}"
     entries.get(key) match {
       case Some(e) if valid(spark, e) =>
         // refresh insertion order so hot keys survive eviction
-        entries.remove(key); entries.put(key, e); e.df
+        entries.remove(key); entries.put(key, e); e.value.asInstanceOf[T]
       case stale =>
         stale.foreach { e => entries.remove(key); drop(spark, e) }
         val before = spark.sparkContext.getPersistentRDDs.keySet
-        val df = build
+        val value = build
         // a nested cached() build (triangle corners → co-sourcing
         // edges) registers its own entry during ours: its blocks
         // are NOT this entry's to track or prune
@@ -120,7 +128,7 @@ object FrameCache {
             live.get(id).foreach(_.unpersist(blocking = false)))
           created = Set(keep)
         }
-        entries.put(key, Entry(df, created, ctxId(spark)))
+        entries.put(key, Entry(value, created, ctxId(spark)))
         while (entries.size > maxEntries) {
           val (k, e) = entries.head
           // loud, not silent: an eviction mid-pass turns sharing back
@@ -136,7 +144,7 @@ object FrameCache {
               "recompute; raise maxEntries if this fires mid-pass")
           entries.remove(k); drop(spark, e)
         }
-        df
+        value
     }
   }
 

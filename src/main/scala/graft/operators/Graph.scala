@@ -27,9 +27,7 @@ object Graph {
     * a distribution summing to 1. */
   def pageRankTrade(lineitem: DataFrame, orders: DataFrame,
                     customer: DataFrame, supplier: DataFrame,
-                    nation: DataFrame, iters: Int = 3,
-                    driverCutoff: Long = DriverCutoff.weightedArcRows)
-      : DataFrame = {
+                    nation: DataFrame, iters: Int = 3): DataFrame = {
     val S = 1000000000000L // rank scale
     // the arc counts are the FrameCache-shared nation fact collapse
     // (one build for pagerank + sssp + closeness); fractions derive
@@ -43,7 +41,7 @@ object Graph {
     val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
     val n = nodes.count()
     val base = ((S / n) * 15L) / 100L
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.weightedArcRows)) {
       // size-adaptive driver twin ([[DriverCutoff]]): the nation
       // graph is ≤ V² arcs; all arithmetic is the identical integer
       // ppm recurrence (commutative BIGINT sums, floor divisions in
@@ -55,9 +53,7 @@ object Graph {
         .select(col("src").cast("long"), col("dst").cast("long"),
           col("frac_ppm").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val natRows = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
+      val natRows = nationNames(nation)
       val pr = mutable.LongMap.empty[Long]
       natRows.foreach { case (v, _) => pr(v) = S / n }
       for (_ <- 0 until iters) {
@@ -72,10 +68,8 @@ object Graph {
       }
       val out = natRows.sortBy(_._1).map { case (v, name) =>
         (name, pr(v), pr(v).toDouble / 1e12) }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "rank_scaled", "rank_norm")
+      return DriverCutoff.frame(lineitem.sparkSession, out.toSeq,
+        "n_name", "rank_scaled", "rank_norm")
     }
     var ranks = nodes.withColumn("pr", lit(S / n))
     for (_ <- 0 until iters) {
@@ -245,9 +239,7 @@ object Graph {
     * (node) or (node, hop) ids only. */
   def bfsTrade(lineitem: DataFrame, orders: DataFrame,
                supplier: DataFrame, nation: DataFrame,
-               maxHops: Int = 4,
-               driverCutoff: Long = DriverCutoff.bipartiteCollectRows)
-      : DataFrame = {
+               maxHops: Int = 4): DataFrame = {
     // even ids = customers, odd = suppliers: one namespace, no
     // structs. The distinct pair collapse is the FrameCache-shared
     // [[bipartitePairs]] (identical distinct set — the namespace map
@@ -263,7 +255,8 @@ object Graph {
       .select((col("s_suppkey") * 2 + 1).as("node"))
       .distinct()
     // symmetrized frame = 2 × 16-byte rows per pair in the budget
-    if (pairs.count() * 2 <= driverCutoff) {
+    if (DriverCutoff.onDriver(DriverCutoff.probe(pairs) * 2,
+        DriverCutoff.bipartiteCollectRows)) {
       // size-adaptive driver BFS ([[DriverCutoff]]; the landmark/
       // harmonic fast-path pattern): the 4 distributed hops ran ~3
       // driver jobs each over KB frontiers at sf0.1 (2.3 s of pure
@@ -272,8 +265,7 @@ object Graph {
       // boundary byte-equal.
       import scala.collection.mutable
       val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      e0.collect().foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
+      collectPairs(e0).foreach { case (a, b) =>
         adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
         adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty[Long]) += a
       }
@@ -293,10 +285,8 @@ object Graph {
           (h, ns.count(_._1 % 2 == 0).toLong,
             ns.count(_._1 % 2 == 1).toLong)
         }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(byHop, 32)
-        .toDF("hop", "n_customers", "n_suppliers")
+      return DriverCutoff.frame(lineitem.sparkSession, byHop,
+        "hop", "n_customers", "n_suppliers")
     }
     val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
@@ -557,24 +547,20 @@ object Graph {
   // aggregate+collect pass runs once per (dataset, cap) — each LP key
   // used to re-pay it per invocation purely to decide to do what it
   // always does at this scale (r12 ADVICE)
-  private val lpFanOutMemo =
-    scala.collection.mutable.HashMap.empty[String, Long]
-  private def lpFanOut(pairs: DataFrame, cap: Int): Long =
-    lpFanOutMemo.synchronized {
-      lpFanOutMemo.getOrElseUpdate(
-        s"${FrameCache.planKey(pairs)}:$cap",
-        pairs.groupBy("supp")
-          .agg(least(count(lit(1)), lit(cap.toLong)).as("d"))
-          .agg(coalesce(sum(expr("d * (d - 1)")), lit(0L)).as("f"))
-          .collect()(0).getLong(0) / 2)
+  private[graft] def lpFanOut(pairs: DataFrame, cap: Int): Long =
+    FrameCache.cached(pairs.sparkSession,
+      s"lpfan:${FrameCache.planKey(pairs)}:$cap") {
+      pairs.groupBy("supp")
+        .agg(least(count(lit(1)), lit(cap.toLong)).as("d"))
+        .agg(coalesce(sum(expr("d * (d - 1)")), lit(0L)).as("f"))
+        .collect()(0).getLong(0) / 2
     }
 
   def commonNeighbors(lineitem: DataFrame, orders: DataFrame,
-                      cap: Int = 64, k: Int = 50,
-                      certificateFloor: Long = DriverCutoff.pairRows)
-      : DataFrame = {
+                      cap: Int = 64, k: Int = 50): DataFrame = {
     val edges = bipartitePairs(lineitem, orders)
-    val smallFan = lpFanOut(edges, cap) <= certificateFloor
+    val smallFan =
+      DriverCutoff.onDriver(lpFanOut(edges, cap), DriverCutoff.pairRows)
     val capped = edges
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("supp")
@@ -667,11 +653,9 @@ object Graph {
     * edges per round, and only (cust, supp) id pairs ever cross an
     * exchange. */
   def kCoreTrade(lineitem: DataFrame, orders: DataFrame,
-                 k: Int = 20, rounds: Int = 4,
-                 driverCutoff: Long = DriverCutoff.bipartiteCollectRows)
-      : DataFrame = {
+                 k: Int = 20, rounds: Int = 4): DataFrame = {
     var e = bipartitePairs(lineitem, orders)
-    if (e.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(e, DriverCutoff.bipartiteCollectRows)) {
       // size-adaptive driver peel ([[DriverCutoff]]): each of the 4
       // distributed rounds paid a checkpoint job + trace aggregates
       // over a KB-scale shrinking frame at sf0.1 — semi-synchronous
@@ -680,7 +664,7 @@ object Graph {
       // Value-equal by construction (the round trace is determined
       // by the peel rule); Round12Spec pins the boundary byte-equal.
       import scala.collection.mutable
-      var pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      var pairs = collectPairs(e)
       val trace = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Long)]
       for (r <- 1 to rounds) {
@@ -694,10 +678,8 @@ object Graph {
         trace += ((r.toLong, nc.size.toLong, ns.size.toLong,
           pairs.length.toLong))
       }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(trace.toSeq, 32)
-        .toDF("round", "n_customers", "n_suppliers", "n_edges")
+      return DriverCutoff.frame(lineitem.sparkSession, trace.toSeq,
+        "round", "n_customers", "n_suppliers", "n_edges")
     }
     val trace = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to rounds) {
@@ -742,11 +724,10 @@ object Graph {
     * orientation changes only intermediate sizes. */
   def kTrussTrade(lineitem: DataFrame, orders: DataFrame,
                   cap: Int = 64, minShared: Int = 2,
-                  k: Int = 4, rounds: Int = 3,
-                  driverCutoff: Long = DriverCutoff.pairRows): DataFrame = {
+                  k: Int = 4, rounds: Int = 3): DataFrame = {
     val eSrc = coSourceEdges(lineitem, orders, cap, minShared)
       .select("u", "v")
-    if (eSrc.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(eSrc, DriverCutoff.pairRows)) {
       // size-adaptive driver peel ([[DriverCutoff]]): per-edge
       // support on a u<v edge set is |N(u) ∩ N(v)| — exactly what
       // the distributed round's triangle-credit explode counts
@@ -756,8 +737,7 @@ object Graph {
       // 2 checkpoint jobs + 3 aggregates each over the KB-scale
       // projection at sf0.1.
       import scala.collection.mutable
-      var edges = eSrc.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      var edges = collectPairs(eSrc).toSeq
       val trace = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Long)]
       for (r <- 1 to rounds) {
@@ -777,10 +757,8 @@ object Graph {
           .distinct.size.toLong
         trace += ((r.toLong, edges.size.toLong, nNodes, nTri))
       }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(trace.toSeq, 32)
-        .toDF("round", "n_edges", "n_customers", "n_triangles")
+      return DriverCutoff.frame(lineitem.sparkSession, trace.toSeq,
+        "round", "n_edges", "n_customers", "n_triangles")
     }
     var e = eSrc.localCheckpoint()
     val trace = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -833,17 +811,16 @@ object Graph {
     * score frame against the edges plus a partial-aggregable sum —
     * linear in edges per round, ids and scores only on the wire. */
   def hitsTrade(lineitem: DataFrame, orders: DataFrame,
-                iters: Int = 3, k: Int = 20,
-                driverCutoff: Long = DriverCutoff.bipartiteCollectRows)
-      : DataFrame = {
+                iters: Int = 3, k: Int = 20): DataFrame = {
     val S = 1000000000000L
     val e = bipartitePairs(lineitem, orders)
     // the driver twin's Long raw-sum exactness argument (below) holds
-    // only while edges·S < 2⁶³; a caller-supplied driverCutoff past
-    // that bound must fall through to the distributed DECIMAL(38,0)
-    // path instead of silently overflowing (r12 ADVICE)
+    // only while edges·S < 2⁶³; a budget whose row bound passes that
+    // must fall through to the distributed DECIMAL(38,0) path instead
+    // of silently overflowing (r12 ADVICE)
     val exactnessCap = Long.MaxValue / S // 9 223 372 edges
-    if (e.count() <= math.min(driverCutoff, exactnessCap)) {
+    if (DriverCutoff.onDriver(e,
+        math.min(DriverCutoff.bipartiteCollectRows, exactnessCap))) {
       // size-adaptive driver twin ([[DriverCutoff]]): the 3
       // Gauss-Seidel rounds each paid 2 checkpoint jobs + 2
       // broadcast-total subqueries over one-row-per-node frames
@@ -852,12 +829,7 @@ object Graph {
       // raw·1e12 div tot as exact integer floor, ties to the
       // smaller id. Round12Spec pins the boundary byte-equal.
       import scala.collection.mutable
-      val edges = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      if (edges.isEmpty)
-        return Seq.empty[(String, Long, Long)]
-          .toDF("role", "node", "score")
+      val edges = collectPairs(e)
       val hubM = mutable.LongMap.empty[Long]
       val authM = mutable.LongMap.empty[Long]
       edges.foreach { case (c, _) => hubM(c) = S }
@@ -885,8 +857,8 @@ object Graph {
         .map { case (s, a) => ("authority", s, a) }
       val topH = hubM.toSeq.sortBy { case (c, h) => (-h, c) }.take(k)
         .map { case (c, h) => ("hub", c, h) }
-      return spark.sparkContext.parallelize(topA ++ topH, 32)
-        .toDF("role", "node", "score")
+      return DriverCutoff.frame(lineitem.sparkSession, topA ++ topH,
+        "role", "node", "score")
     }
     var hub = e.select("cust").distinct().withColumn("h", lit(S))
     var auth = e.select("supp").distinct().withColumn("a", lit(S))
@@ -933,13 +905,10 @@ object Graph {
     * fan-out (the measured deg-before lesson at :312), and the
     * top-k is TakeOrderedAndProject — never a global sort. */
   def resourceAllocation(lineitem: DataFrame, orders: DataFrame,
-                         cap: Int = 64, k: Int = 50,
-                         certificateFloor: Long = DriverCutoff.pairRows)
-      : DataFrame =
+                         cap: Int = 64, k: Int = 50): DataFrame =
     witnessWeightedTopK(lineitem, orders, cap, k,
       capSalt = "ra:", sampleSalt = "ras:",
-      weightSql = "1000000 div sdeg", scoreName = "ra_ppm",
-      certificateFloor = certificateFloor)
+      weightSql = "1000000 div sdeg", scoreName = "ra_ppm")
 
   /** Adamic–Adar link prediction: AA(c1,c2) = Σ_{s ∈ common}
     * 1/log deg(s) — the witness-weighted index between raw common
@@ -954,14 +923,11 @@ object Graph {
     * customer-sampled lossless τ̂ prune, same plan shape as RA —
     * one shared generator, different witness weight. */
   def adamicAdar(lineitem: DataFrame, orders: DataFrame,
-                 cap: Int = 64, k: Int = 50,
-                 certificateFloor: Long = DriverCutoff.pairRows)
-      : DataFrame =
+                 cap: Int = 64, k: Int = 50): DataFrame =
     witnessWeightedTopK(lineitem, orders, cap, k,
       capSalt = "aa:", sampleSalt = "aas:",
       weightSql = "1000000 div (length(bin(sdeg)) - 1)",
-      scoreName = "aa_ppm", minSdeg = 2,
-      certificateFloor = certificateFloor)
+      scoreName = "aa_ppm", minSdeg = 2)
 
   /** The shared witness-weighted link-prediction generator behind
     * [[resourceAllocation]] and [[adamicAdar]]: capped adjacency,
@@ -971,15 +937,14 @@ object Graph {
   private def witnessWeightedTopK(lineitem: DataFrame, orders: DataFrame,
                                   cap: Int, k: Int, capSalt: String,
                                   sampleSalt: String, weightSql: String,
-                                  scoreName: String, minSdeg: Int = 1,
-                                  certificateFloor: Long =
-                                    DriverCutoff.pairRows)
+                                  scoreName: String, minSdeg: Int = 1)
       : DataFrame = {
     val edges = bipartitePairs(lineitem, orders)
     // small fan-out ⇒ the τ̂ certificate cannot pay for its own jobs;
     // skipping it is lossless (τ̂ = 0 ⇒ unpruned plan verbatim) —
     // see [[lpFanOut]]
-    val smallFan = lpFanOut(edges, cap) <= certificateFloor
+    val smallFan =
+      DriverCutoff.onDriver(lpFanOut(edges, cap), DriverCutoff.pairRows)
     val capped = edges
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("supp")
@@ -1119,11 +1084,9 @@ object Graph {
   def ssspTrade(lineitem: DataFrame, orders: DataFrame,
                 customer: DataFrame, supplier: DataFrame,
                 nation: DataFrame, src: Long = 0L,
-                maxIter: Int = 30,
-                driverCutoff: Long = DriverCutoff.weightedArcRows)
-      : DataFrame = {
+                maxIter: Int = 30): DataFrame = {
     val edges = weightedNationEdges(lineitem, orders, customer, supplier)
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.weightedArcRows)) {
       // size-adaptive driver Bellman–Ford ([[DriverCutoff]]): the
       // nation arc frame is ≤ V² rows and each distributed round
       // paid 2 driver jobs; the twin runs the identical SYNCHRONOUS
@@ -1133,9 +1096,7 @@ object Graph {
       import scala.collection.mutable
       val arcs = edges.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val natRows = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
+      val natRows = nationNames(nation)
       val dist = mutable.LongMap.empty[Long] // value ⇔ reached
       // the distributed frame starts with every NATION node present
       // (d null) and seeds d = 0 only when src is one of them; its
@@ -1166,10 +1127,8 @@ object Graph {
             "raise maxIter for a graph of larger diameter)")
       val out = natRows.sortBy(_._1).map { case (n, name) =>
         (name, n, dist.getOrElse(n, -1L)) }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "node", "dist")
+      return DriverCutoff.frame(lineitem.sparkSession, out.toSeq,
+        "n_name", "node", "dist")
     }
     val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
     var dist = nodes.select(col("node"),
@@ -1273,43 +1232,12 @@ object Graph {
     * composition point [[topoLayersTrade]] uses to avoid paying the
     * fact join twice. */
   private def sccFromEdges(edges: DataFrame, nation: DataFrame,
-                           maxIter: Int,
-                           driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
-    if (edges.count() <= driverCutoff) {
-      // size-adaptive driver closure ([[DriverCutoff]]): the nation
-      // graph is ≤ V² ≤ 625 pairs and the squaring loop paid 2
-      // driver jobs per round — the driver twin runs the IDENTICAL
-      // rounds (same squaring recurrence, same convergence test,
-      // same maxIter guard) on an in-memory pair set.
-      import scala.collection.mutable
-      var reach = edges.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter + 1) {
-        val byA = reach.groupBy(_._1)
-        val nxt = reach ++ reach.flatMap { case (a, b) =>
-          byA.getOrElse(b, Nil).map { case (_, c) => (a, c) } }
-        converged = nxt.size == reach.size
-        reach = nxt
-        i += 1
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"sccTrade closure did not converge in $maxIter rounds")
-      val sccId = mutable.LongMap.empty[Long]
-      nation.select(col("n_nationkey").cast("long")).collect()
-        .map(_.getLong(0)).foreach { v =>
-          val peers = reach.collect {
-            case (a, b) if a == v && reach.contains((b, a)) => b }
-          sccId(v) = (peers + v).min
-        }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(
-        sccId.toSeq.sortBy(_._1), 32).toDF("node", "scc_id")
-    }
+                           maxIter: Int): DataFrame = {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.pairRows))
+      return DriverCutoff.frame(edges.sparkSession,
+        sccDriver(collectPairs(edges), nationNames(nation).map(_._1),
+          maxIter),
+        "node", "scc_id")
     var reach = edges
     var converged = false
     var i = 0
@@ -1335,6 +1263,45 @@ object Graph {
       .agg(coalesce(least(min("peer"), col("node")), col("node"))
         .as("scc_id"))
   }
+
+  /** [[sccFromEdges]]' driver twin ([[DriverCutoff]]): the nation
+    * graph is ≤ V² ≤ 625 pairs and the squaring loop paid 2 driver
+    * jobs per round — this runs the IDENTICAL rounds (same squaring
+    * recurrence, same convergence test, same maxIter guard) on an
+    * in-memory pair set. (node, scc_id) sorted by node. */
+  private def sccDriver(arcs: Array[(Long, Long)], nodes: Array[Long],
+                        maxIter: Int): Seq[(Long, Long)] = {
+    var reach = arcs.toSet
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter + 1) {
+      val byA = reach.groupBy(_._1)
+      val nxt = reach ++ reach.flatMap { case (a, b) =>
+        byA.getOrElse(b, Nil).map { case (_, c) => (a, c) } }
+      converged = nxt.size == reach.size
+      reach = nxt
+      i += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"sccTrade closure did not converge in $maxIter rounds")
+    val sccId = scala.collection.mutable.LongMap.empty[Long]
+    nodes.foreach { v =>
+      val peers = reach.collect {
+        case (a, b) if a == v && reach.contains((b, a)) => b }
+      sccId(v) = (peers + v).min
+    }
+    sccId.toSeq.sortBy(_._1)
+  }
+
+  /** Driver-twin input: the (long, long) rows of an id-pair frame. */
+  private def collectPairs(edges: DataFrame): Array[(Long, Long)] =
+    edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+
+  /** Driver-twin input: the nation dim's (n_nationkey, n_name). */
+  private def nationNames(nation: DataFrame): Array[(Long, String)] =
+    nation.select(col("n_nationkey").cast("long"), col("n_name"))
+      .collect().map(r => (r.getLong(0), r.getString(1)))
 
   def sccTrade(lineitem: DataFrame, orders: DataFrame,
                customer: DataFrame, supplier: DataFrame,
@@ -1384,29 +1351,25 @@ object Graph {
     * layer — the per-node join back is one broadcast. */
   def topoLayersTrade(lineitem: DataFrame, orders: DataFrame,
                       customer: DataFrame, supplier: DataFrame,
-                      nation: DataFrame, maxIter: Int = 30,
-                      driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
+                      nation: DataFrame, maxIter: Int = 30): DataFrame = {
     val edges = tradeEdges(lineitem, orders, customer, supplier)
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.pairRows)) {
       // size-adaptive driver layering ([[DriverCutoff]]): the
       // condensation is ≤ V ≤ 25 components here and the max-relax
       // loop paid 2 driver jobs per depth round; the driver twin
       // runs the identical synchronous rounds + maxIter guard.
       import scala.collection.mutable
-      val sccRows = sccFromEdges(edges, nation, maxIter, driverCutoff)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val arcs = collectPairs(edges)
+      val names = nationNames(nation)
+      val sccRows = sccDriver(arcs, names.map(_._1), maxIter)
       val sccOf = sccRows.toMap
       // endpoints absent from the scc frame (no FK integrity) are
       // DROPPED, mirroring the distributed path's inner join on scc —
       // Map.apply here would crash where the cluster path silently
       // drops the arc, diverging across the size cutoff (r12 ADVICE)
-      val condPairs = edges.collect()
-        .flatMap { r =>
-          for {
-            sa <- sccOf.get(r.getLong(0))
-            sb <- sccOf.get(r.getLong(1))
-          } yield (sa, sb)
+      val condPairs = arcs
+        .flatMap { case (a, b) =>
+          for { sa <- sccOf.get(a); sb <- sccOf.get(b) } yield (sa, sb)
         }
         .filter { case (sa, sb) => sa != sb }.toSet
       val layer = mutable.LongMap.empty[Long]
@@ -1426,18 +1389,12 @@ object Graph {
         throw new IllegalStateException(
           s"topoLayersTrade did not converge in $maxIter rounds " +
             "(the condensation is a DAG; raise maxIter for deeper ones)")
-      val names = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val out = sccRows.sortBy(_._1).map { case (n, s) =>
-        (names(n), n, s, layer(s)) }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "node", "scc_id", "layer")
+      val nameOf = names.toMap
+      val out = sccRows.map { case (n, s) => (nameOf(n), n, s, layer(s)) }
+      return DriverCutoff.frame(lineitem.sparkSession, out,
+        "n_name", "node", "scc_id", "layer")
     }
-    val scc = sccFromEdges(edges, nation, maxIter, driverCutoff)
-      .localCheckpoint()
+    val scc = sccFromEdges(edges, nation, maxIter).localCheckpoint()
     val cond = edges
       .join(scc.select(col("node").as("a"), col("scc_id").as("sa")), "a")
       .join(scc.select(col("node").as("b"), col("scc_id").as("sb")), "b")
@@ -1491,20 +1448,16 @@ object Graph {
     * n_reachable, not total_dist. */
   def closenessTrade(lineitem: DataFrame, orders: DataFrame,
                      customer: DataFrame, supplier: DataFrame,
-                     nation: DataFrame, maxIter: Int = 30,
-                     driverCutoff: Long = DriverCutoff.weightedArcRows)
-      : DataFrame = {
+                     nation: DataFrame, maxIter: Int = 30): DataFrame = {
     val edges = weightedNationEdges(lineitem, orders, customer, supplier)
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.weightedArcRows)) {
       // size-adaptive driver all-sources Bellman–Ford — the
       // [[ssspTrade]] twin per source over the ≤ V² arc frame, same
       // synchronous rounds / convergence semantics / maxIter guard.
       import scala.collection.mutable
       val arcs = edges.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val natRows = nation
-        .select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1)))
+      val natRows = nationNames(nation)
       // dist(src) maps node → d (value ⇔ reached); every (src, node)
       // NATION pair starts present-with-null per the crossJoin init,
       // so first-reach of a nation node counts as an improvement,
@@ -1547,10 +1500,8 @@ object Graph {
         val m = dist(s)
         (name, s, m.size.toLong, m.values.sum)
       }
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("n_name", "node", "n_reachable", "total_dist")
+      return DriverCutoff.frame(lineitem.sparkSession, out.toSeq,
+        "n_name", "node", "n_reachable", "total_dist")
     }
     val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
     var dist = nodes.select(col("node").as("src"))
@@ -1685,10 +1636,8 @@ object Graph {
     * pairs, so it scales past the oracle's envelope). */
   def sccKeysTrade(lineitem: DataFrame, orders: DataFrame,
                    minTrades: Int = 2, minReturns: Int = 2,
-                   maxIter: Int = 200,
-                   driverCutoff: Long = DriverCutoff.pairRows): DataFrame =
-    sccKeysShared(lineitem, orders, minTrades, minReturns, maxIter,
-      driverCutoff)
+                   maxIter: Int = 200): DataFrame =
+    sccKeysShared(lineitem, orders, minTrades, minReturns, maxIter)
 
   /** FrameCache-shared [[sccKeysCore]] result: graph_scc_keys and
     * graph_topo_layers_keys both need the SCC assignment of the same
@@ -1698,15 +1647,14 @@ object Graph {
     * checkpoint here cost one driver job per invocation). */
   private def sccKeysShared(lineitem: DataFrame, orders: DataFrame,
                             minTrades: Int, minReturns: Int,
-                            maxIter: Int, driverCutoff: Long)
+                            maxIter: Int)
       : DataFrame = FrameCache.cached(lineitem.sparkSession,
     s"sck:${FrameCache.planKey(lineitem, orders)}:" +
-      s"$minTrades:$minReturns:$maxIter:$driverCutoff",
-    keepOnlyLast = true) {
+      s"$minTrades:$minReturns:$maxIter", keepOnlyLast = true) {
     sccKeysCore(
       repeatKeyEdges(lineitem, orders, minTrades, minReturns)
         .select("a", "b"),
-      lineitem.sparkSession, maxIter, driverCutoff).localCheckpoint()
+      lineitem.sparkSession, maxIter).localCheckpoint()
   }
 
   /** [[sccKeysTrade]]'s core over an already-built arc frame — the
@@ -1716,8 +1664,7 @@ object Graph {
     * used to pay the 4-table join twice, 9.24 -> 4.95 s at sf10). */
   private def sccKeysCore(edges0: DataFrame,
                           session: org.apache.spark.sql.SparkSession,
-                          maxIter: Int,
-                          driverCutoff: Long): DataFrame = {
+                          maxIter: Int): DataFrame = {
     // SIZE-ADAPTIVE execution (the [[graft.operators.Dedup
     // .connectedComponents]] contract): the thresholded arc frame is
     // orders of magnitude smaller than its corpus and its count is
@@ -1729,14 +1676,13 @@ object Graph {
     // milliseconds; min-member ids make the outputs byte-equal
     // (spec-pinned). Above the cutoff — a denser graph at 100 TB —
     // the distributed decomposition below runs unchanged.
-    if (edges0.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges0, DriverCutoff.pairRows)) {
       import scala.collection.mutable
       val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
       // node universe as a LongMap + one array sort — a SortedSet's
       // per-insert tree rebalance was ~10 s of the sf10 pass alone
       val seen = mutable.LongMap.empty[Unit]
-      edges0.collect().foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
+      collectPairs(edges0).foreach { case (a, b) =>
         adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
         seen(a) = (); seen(b) = ()
       }
@@ -1786,16 +1732,9 @@ object Graph {
       }
       val sizes = mutable.LongMap.empty[Long].withDefaultValue(0L)
       comp.values.foreach(id => sizes(id) = sizes(id) + 1L)
-      val spark = session
-      import spark.implicits._
-      // ship the result as a parallelized RDD, not a LocalRelation:
-      // LocalRelation encodes every row ON THE DRIVER per execution
-      // (~60 s of the 890k-node sf10 pass); parallelize slices the
-      // raw tuples and converts on executors
-      return spark.sparkContext
-        .parallelize(nodeSet.toSeq.map(n =>
-          (n, comp(n), sizes(comp(n)))), 32)
-        .toDF("node", "scc_id", "scc_size")
+      return DriverCutoff.frame(session,
+        nodeSet.toSeq.map(n => (n, comp(n), sizes(comp(n)))),
+        "node", "scc_id", "scc_size")
     }
     val allNodes = edges0.select(col("a").as("node"))
       .unionByName(edges0.select(col("b").as("node"))).distinct()
@@ -1925,20 +1864,19 @@ object Graph {
     * Output: (node, scc_id, layer) for every edge-bearing node. */
   def topoLayersKeysTrade(lineitem: DataFrame, orders: DataFrame,
                           minTrades: Int = 2, minReturns: Int = 2,
-                          maxIter: Int = 200, sweepBound: Int = 60,
-                          driverCutoff: Long = DriverCutoff.pairRows)
+                          maxIter: Int = 200, sweepBound: Int = 60)
       : DataFrame = {
     val edges = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
       .select("a", "b")
     val scc = sccKeysShared(lineitem, orders, minTrades, minReturns,
-      maxIter, driverCutoff)
+      maxIter)
     // the condensation arc frame is a pure function of (dataset,
     // params) like the scc frame it derives from — FrameCache'd so
     // the per-invocation join+distinct+checkpoint jobs run once per
     // pass (r13); O(#inter-SCC arcs) rows
     val cond = FrameCache.cached(lineitem.sparkSession,
       s"tlc:${FrameCache.planKey(lineitem, orders)}:" +
-        s"$minTrades:$minReturns:$maxIter:$driverCutoff") {
+        s"$minTrades:$minReturns:$maxIter") {
       edges
         .join(scc.select(col("node").as("a"), col("scc_id").as("sa")), "a")
         .join(scc.select(col("node").as("b"), col("scc_id").as("sb")), "b")
@@ -1947,7 +1885,7 @@ object Graph {
         .localCheckpoint()
     }
     val layers =
-      if (cond.count() <= driverCutoff) {
+      if (DriverCutoff.onDriver(cond, DriverCutoff.pairRows)) {
         import scala.collection.mutable
         val succs = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
         val indeg = mutable.LongMap.empty[Int].withDefaultValue(0)
@@ -1982,14 +1920,8 @@ object Graph {
           throw new IllegalStateException(
             s"topoLayersKeysTrade depth exceeds $sweepBound — raise " +
               "sweepBound (and the oracle's sweep bound)")
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        // parallelized, not LocalRelation — same driver-encoding
-        // trap as the SCC result (the frame is every scc_id,
-        // singletons included)
-        spark.sparkContext
-          .parallelize(comps.toSeq.map(c => (c, layer(c))), 32)
-          .toDF("scc_id", "layer")
+        DriverCutoff.frame(lineitem.sparkSession,
+          comps.toSeq.map(c => (c, layer(c))), "scc_id", "layer")
       } else {
         var lay = scc.select("scc_id").distinct()
           .withColumn("layer", lit(0L)).localCheckpoint()
@@ -2040,8 +1972,7 @@ object Graph {
     * (node, n_reach, harmonic_ppm) for nodes ≥1 landmark reaches. */
   def harmonicKeysTrade(lineitem: DataFrame, orders: DataFrame,
                         minTrades: Int = 2, minReturns: Int = 2,
-                        landmarks: Int = 8, maxIter: Int = 60,
-                        driverCutoff: Long = DriverCutoff.pairRows)
+                        landmarks: Int = 8, maxIter: Int = 60)
       : DataFrame = {
     val edges = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
       .select("a", "b") // narrow projection of a cached frame — the
@@ -2054,28 +1985,12 @@ object Graph {
       .limit(landmarks)
       .select(col("node").as("lm"))
       .localCheckpoint()
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.pairRows)) {
       import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      edges.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0),
-          mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-      }
-      val none = mutable.ArrayBuffer.empty[Long]
       val nReach = mutable.LongMap.empty[Long].withDefaultValue(0L)
       val harmonic = mutable.LongMap.empty[Long].withDefaultValue(0L)
       var maxHop = 0L
-      lms.collect().map(_.getLong(0)).foreach { lm =>
-        val hop = mutable.LongMap.empty[Long]
-        hop(lm) = 0L
-        var frontier = List(lm)
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap { v =>
-            adj.getOrElse(v, none).filterNot(hop.contains).map { w =>
-              hop(w) = hop(v) + 1L; w
-            }
-          }
-        }
+      driverHops(edges, lms).foreach { case (_, hop) =>
         hop.foreach { case (n, h) =>
           if (h >= 1L) {
             nReach(n) += 1L; harmonic(n) += 1000000L / h
@@ -2087,11 +2002,9 @@ object Graph {
         throw new IllegalStateException(
           s"harmonicKeysTrade hops exceed $maxIter — raise maxIter " +
             "(and the oracle's sweep bound)")
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      return spark.sparkContext.parallelize(nReach.keys.toSeq.sorted
-          .map(n => (n, nReach(n), harmonic(n))), 32)
-        .toDF("node", "n_reach", "harmonic_ppm")
+      return DriverCutoff.frame(lineitem.sparkSession,
+        nReach.keys.toSeq.sorted.map(n => (n, nReach(n), harmonic(n))),
+        "node", "n_reach", "harmonic_ppm")
     }
     var dist = lms.select(col("lm"), col("lm").as("node"))
       .withColumn("h", lit(0L)).localCheckpoint()
@@ -2125,9 +2038,7 @@ object Graph {
   def ssspKeysTrade(lineitem: DataFrame, orders: DataFrame,
                     customer: DataFrame, nation: DataFrame,
                     minTrades: Int = 2, minReturns: Int = 2,
-                    maxIter: Int = 60,
-                    driverCutoff: Long = DriverCutoff.weightedArcRows)
-      : DataFrame = {
+                    maxIter: Int = 60): DataFrame = {
     val edges = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
     val srcNation = nation.orderBy("n_name", "n_nationkey").limit(1)
       .select("n_nationkey")
@@ -2142,7 +2053,7 @@ object Graph {
     // non-negative costs — same min-plus fixpoint the loop computes)
     // replaces ~80 tiny-frame relaxation jobs; byte-equal outputs,
     // spec-pinned. Above it the Bellman–Ford loop runs unchanged.
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.weightedArcRows)) {
       import scala.collection.mutable
       val adj = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long)]]
       edges.collect().foreach { r =>
@@ -2185,15 +2096,10 @@ object Graph {
         throw new IllegalStateException(
           s"ssspKeysTrade optimal paths exceed $maxIter hops — " +
             "raise maxIter (and the oracle's sweep bound)")
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      // parallelized, not LocalRelation (the reached set is
-      // corpus-proportional under wide seed nations)
-      return spark.sparkContext.parallelize(d.toSeq
-          .map { case (n, dd) =>
-            (if (n % 2 == 0) "cust" else "supp", n, dd)
-          }, 32)
-        .toDF("node_type", "node", "dist")
+      return DriverCutoff.frame(lineitem.sparkSession,
+        d.toSeq.map { case (n, dd) =>
+          (if (n % 2 == 0) "cust" else "supp", n, dd)
+        }, "node_type", "node", "dist")
     }
     var dist = seeds
       .withColumn("d", lit(0L))
@@ -2248,9 +2154,7 @@ object Graph {
     * set, and the iteration frame is (node, pr) BIGINT pairs. */
   def pageRankKeysTrade(lineitem: DataFrame, orders: DataFrame,
                         minTrades: Int = 2, minReturns: Int = 2,
-                        iters: Int = 3,
-                        driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
+                        iters: Int = 3): DataFrame = {
     val S = 1000000000000L
     val arcs = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
       .select("a", "b")
@@ -2265,14 +2169,14 @@ object Graph {
     // sums are exact while arcs·S < 2⁶³ (the hitsTrade exactness
     // cap); past min(cutoff, cap) the distributed loop runs
     // UNCHANGED — the 100 TB path.
-    if (arcs.count() <= math.min(driverCutoff, Long.MaxValue / S)) {
+    if (DriverCutoff.onDriver(arcs,
+        math.min(DriverCutoff.pairRows, Long.MaxValue / S))) {
       import scala.collection.mutable
-      val pairs = arcs.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val pairs = collectPairs(arcs)
       val spark = lineitem.sparkSession
-      import spark.implicits._
       if (pairs.isEmpty)
-        return Seq.empty[(String, Long, Long)]
-          .toDF("node_type", "node", "pr_scaled")
+        return DriverCutoff.frame(spark, Seq.empty[(String, Long, Long)],
+          "node_type", "node", "pr_scaled")
       val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
       pairs.foreach { case (a, _) => od(a) += 1L }
       val seen = mutable.LongMap.empty[Unit]
@@ -2290,8 +2194,8 @@ object Graph {
       }
       val out = nodeArr.sorted.map(v =>
         (if (v % 2 == 0) "cust" else "supp", v, pr(v)))
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("node_type", "node", "pr_scaled")
+      return DriverCutoff.frame(spark, out.toSeq,
+        "node_type", "node", "pr_scaled")
     }
     val nodes = arcs.select(col("a").as("node"))
       .unionByName(arcs.select(col("b").as("node"))).distinct()
@@ -2519,9 +2423,7 @@ object Graph {
   def pprKeysTrade(lineitem: DataFrame, orders: DataFrame,
                    customer: DataFrame, nation: DataFrame,
                    minTrades: Int = 2, minReturns: Int = 2,
-                   iters: Int = 3,
-                   driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
+                   iters: Int = 3): DataFrame = {
     val S = 1000000000000L
     val arcs = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
       .select("a", "b")
@@ -2548,15 +2450,15 @@ object Graph {
     // contribution only" — byte-equal (Round13Spec pins the
     // boundary). Above min(cutoff, cap) the distributed loop runs
     // UNCHANGED.
-    if (arcs.count() <= math.min(driverCutoff, Long.MaxValue / S)) {
+    if (DriverCutoff.onDriver(arcs,
+        math.min(DriverCutoff.pairRows, Long.MaxValue / S))) {
       import scala.collection.mutable
-      val pairs = arcs.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val pairs = collectPairs(arcs)
       val seedArr = seedsLazy.collect().map(_.getLong(0))
       val spark = lineitem.sparkSession
-      import spark.implicits._
       if (seedArr.isEmpty)
-        return Seq.empty[(String, Long, Long)]
-          .toDF("node_type", "node", "ppr_scaled")
+        return DriverCutoff.frame(spark, Seq.empty[(String, Long, Long)],
+          "node_type", "node", "ppr_scaled")
       val od = mutable.LongMap.empty[Long].withDefaultValue(0L)
       pairs.foreach { case (a, _) => od(a) += 1L }
       val nSeeds = seedArr.length.toLong
@@ -2578,8 +2480,8 @@ object Graph {
       }
       val out = pr.toSeq.filter(_._2 > 0L).sortBy(_._1).map { case (v, p) =>
         (if (v % 2 == 0) "cust" else "supp", v, p) }
-      return spark.sparkContext.parallelize(out, 32)
-        .toDF("node_type", "node", "ppr_scaled")
+      return DriverCutoff.frame(spark, out,
+        "node_type", "node", "ppr_scaled")
     }
     val seeds = seedsLazy.localCheckpoint()
     val outd = arcs.groupBy("a").agg(count(lit(1)).as("od"))
@@ -2631,7 +2533,7 @@ object Graph {
     * projection edge and are absent by the O(edge-bearing) output
     * contract.
     *
-    * driverCutoff is [[DriverCutoff.pairRows]] (~8.4M 16-byte
+    * The cutoff is [[DriverCutoff.pairRows]] (~8.4M 16-byte
     * (long, long) rows — the shared 128 MiB driver budget): this is
     * the op whose r11 incident MOTIVATED the byte contract — at
     * sf10 the projection lands at 4.25M directed edges, just past
@@ -2642,15 +2544,12 @@ object Graph {
     * size tier up). Past the budget — true cluster scale — the
     * distributed path-halving loop runs unchanged. */
   def cosourceComponents(lineitem: DataFrame, orders: DataFrame,
-                         cap: Int = 64, minShared: Int = 2,
-                         driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
+                         cap: Int = 64, minShared: Int = 2): DataFrame = {
     val und = coSourceEdges(lineitem, orders, cap, minShared)
     val nodes = und.select(col("u").as("doc_id"))
       .unionByName(und.select(col("v").as("doc_id"))).distinct()
     val labeled = graft.operators.Dedup.connectedComponents(
-      und.select(col("u").as("doc1"), col("v").as("doc2")), nodes,
-      driverCutoff = driverCutoff)
+      und.select(col("u").as("doc1"), col("v").as("doc2")), nodes)
       .select(col("doc_id").as("cust"), col("cluster_id").as("segment_id"))
     labeled.join(
       labeled.groupBy("segment_id").agg(count(lit(1)).as("segment_size")),
@@ -2680,6 +2579,31 @@ object Graph {
           .cast("long").as("cc_ppm"))
   }
 
+  /** The landmark family's driver BFS: the min-hop map from each
+    * collected landmark over the collected (a, b) arcs — unique per
+    * landmark, so it equals the distributed min-hop loop. */
+  private def driverHops(edges: DataFrame, lms: DataFrame)
+      : Seq[(Long, scala.collection.mutable.LongMap[Long])] = {
+    import scala.collection.mutable
+    val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+    collectPairs(edges).foreach { case (a, b) =>
+      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b }
+    val none = mutable.ArrayBuffer.empty[Long]
+    lms.collect().toSeq.map(_.getLong(0)).map { lm =>
+      val hop = mutable.LongMap.empty[Long]
+      hop(lm) = 0L
+      var frontier = List(lm)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap { v =>
+          adj.getOrElse(v, none).filterNot(hop.contains).map { w =>
+            hop(w) = hop(v) + 1L; w
+          }
+        }
+      }
+      lm -> hop
+    }
+  }
+
   /** Family-shared landmark distance frame over the KEY-LEVEL
     * repeat-business graph: (lm, node, h) for 8 md5-chosen 'bw:'
     * pivots — ONE multi-source BFS keyed (landmark, node), the same
@@ -2694,11 +2618,10 @@ object Graph {
     * unequal). */
   private def landmarkDistKeys(lineitem: DataFrame, orders: DataFrame,
                                minTrades: Int, minReturns: Int,
-                               landmarks: Int, maxIter: Int,
-                               driverCutoff: Long = DriverCutoff.pairRows)
+                               landmarks: Int, maxIter: Int)
       : DataFrame = FrameCache.cached(lineitem.sparkSession,
     s"lbfs:${FrameCache.planKey(lineitem, orders)}:" +
-      s"$minTrades:$minReturns:$landmarks:$maxIter:$driverCutoff",
+      s"$minTrades:$minReturns:$landmarks:$maxIter",
     // the BFS loop checkpoints every round; only the converged
     // frame (the max created id) may be pinned — pinning the loop
     // intermediates lets the ContextCleaner invalidate the entry
@@ -2716,46 +2639,22 @@ object Graph {
       .limit(landmarks)
       .select(col("node").as("lm"))
       .localCheckpoint()
-    if (edges.count() <= driverCutoff) {
+    if (DriverCutoff.onDriver(edges, DriverCutoff.pairRows)) {
       // size-adaptive driver BFS (the [[harmonicKeysTrade]] fast
       // path, [[DriverCutoff]] byte budget): the sf0.1 BFS runs 47
       // distributed rounds × 2 driver jobs on KB-scale frontiers —
       // pure per-job fixed cost. Value-equal to the loop below by
       // construction (min-hop BFS is unique); Round12Spec pins the
       // family byte-equal across the cutoff.
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      edges.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getLong(0),
-          mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-      }
-      val none = mutable.ArrayBuffer.empty[Long]
-      val rows = mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      var maxHop = 0L
-      lms.collect().map(_.getLong(0)).foreach { lm =>
-        val hop = mutable.LongMap.empty[Long]
-        hop(lm) = 0L
-        var frontier = List(lm)
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap { v =>
-            adj.getOrElse(v, none).filterNot(hop.contains).map { w =>
-              hop(w) = hop(v) + 1L; w
-            }
-          }
-        }
-        hop.foreach { case (n, h) =>
-          rows += ((lm, n, h))
-          if (h > maxHop) maxHop = h
-        }
-      }
-      if (maxHop > maxIter)
+      val rows = for ((lm, hop) <- driverHops(edges, lms); (n, h) <- hop)
+        yield (lm, n, h)
+      if (rows.exists(_._3 > maxIter))
         throw new IllegalStateException(
           s"landmarkDistKeys did not converge in $maxIter rounds — " +
             "raise maxIter (and the oracle's sweep bound)")
-      val spark = lineitem.sparkSession
-      import spark.implicits._
-      spark.sparkContext.parallelize(rows.sortBy(r => (r._1, r._2)).toSeq, 32)
-        .toDF("lm", "node", "h").localCheckpoint()
+      DriverCutoff.frame(lineitem.sparkSession,
+        rows.sortBy(r => (r._1, r._2)), "lm", "node", "h")
+        .localCheckpoint()
     } else {
       var dist = lms.select(col("lm"), col("lm").as("node"))
         .withColumn("h", lit(0L)).localCheckpoint()
@@ -2795,11 +2694,10 @@ object Graph {
     * themselves at h = 0). */
   def eccentricityKeysTrade(lineitem: DataFrame, orders: DataFrame,
                             minTrades: Int = 2, minReturns: Int = 2,
-                            landmarks: Int = 8, maxIter: Int = 60,
-                            driverCutoff: Long = DriverCutoff.pairRows)
+                            landmarks: Int = 8, maxIter: Int = 60)
       : DataFrame = {
     landmarkDistKeys(lineitem, orders, minTrades, minReturns,
-      landmarks, maxIter, driverCutoff)
+      landmarks, maxIter)
       .groupBy("node")
       .agg(max("h").as("ecc_lb"), count(lit(1)).as("n_lm"))
       .select(
@@ -2819,11 +2717,10 @@ object Graph {
     * the 'bw:' pivot family. */
   def hopHistogramKeysTrade(lineitem: DataFrame, orders: DataFrame,
                             minTrades: Int = 2, minReturns: Int = 2,
-                            landmarks: Int = 8, maxIter: Int = 60,
-                            driverCutoff: Long = DriverCutoff.pairRows)
+                            landmarks: Int = 8, maxIter: Int = 60)
       : DataFrame = {
     landmarkDistKeys(lineitem, orders, minTrades, minReturns,
-      landmarks, maxIter, driverCutoff)
+      landmarks, maxIter)
       .groupBy("h")
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct("node").as("n_nodes"))
@@ -2859,22 +2756,20 @@ object Graph {
   def betweennessKeysTrade(lineitem: DataFrame, orders: DataFrame,
                            minTrades: Int = 2, minReturns: Int = 2,
                            landmarks: Int = 8, horizon: Int = 8,
-                           maxIter: Int = 60,
-                           driverCutoff: Long = DriverCutoff.pairRows)
-      : DataFrame = {
+                           maxIter: Int = 60): DataFrame = {
     val cap = 9000000000000L // 9e12: σ·10⁶ and r_ppm·(10⁶+δ) < 2⁶³
     val spark = lineitem.sparkSession
     val edges = repeatKeyEdges(lineitem, orders, minTrades, minReturns)
       .select("a", "b") // cached parent — no eager re-checkpoint
-    if (edges.count() <= driverCutoff)
+    if (DriverCutoff.onDriver(edges, DriverCutoff.pairRows))
       return betweennessDriver(spark, edges,
         landmarkDistKeys(lineitem, orders, minTrades, minReturns,
-          landmarks, maxIter, driverCutoff),
+          landmarks, maxIter),
         horizon, cap)
     val nodes = edges.select(col("a").as("node"))
       .unionByName(edges.select(col("b").as("node"))).distinct()
     val dd = landmarkDistKeys(lineitem, orders, minTrades, minReturns,
-        landmarks, maxIter, driverCutoff)
+        landmarks, maxIter)
       .filter(col("h") <= horizon).localCheckpoint()
     // checkpoint FIRST, then read the max off the materialized
     // blocks — check-then-checkpoint would compute every level's
@@ -2956,8 +2851,7 @@ object Graph {
     import scala.collection.mutable
     val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
     val nodeSet = mutable.SortedSet.empty[Long]
-    edges.collect().foreach { r =>
-      val a = r.getLong(0); val b = r.getLong(1)
+    collectPairs(edges).foreach { case (a, b) =>
       adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty[Long]) += b
       nodeSet += a; nodeSet += b
     }
@@ -3012,11 +2906,9 @@ object Graph {
       }
       del.foreach { case (n, d) => if (n != lm) btw(n) += d }
     }
-    import spark.implicits._
-    val out = nodeSet.toSeq.map(n =>
-      (if (n % 2 == 0) "cust" else "supp", n, btw(n)))
-    spark.sparkContext.parallelize(out, 32)
-      .toDF("node_type", "node", "btw_ppm")
+    DriverCutoff.frame(spark, nodeSet.toSeq.map(n =>
+        (if (n % 2 == 0) "cust" else "supp", n, btw(n))),
+      "node_type", "node", "btw_ppm")
   }
 
   /** Degree-mixing matrix over the KEY-LEVEL repeat-business graph —

@@ -607,17 +607,25 @@ object Similarity {
     out.toArray
   }
 
+  /** The size probe of an embedding frame: (rows, dim) in ONE Spark
+    * job over the frame's own plan (the [[DriverCutoff.probe]]
+    * contract); dim is the widest embedding, 0 for an empty frame. */
+  private def embShape(embs: DataFrame): (Long, Int) =
+    embs.select(size(col("embedding"))).queryExecution.toRdd
+      .aggregate((0L, 0))(
+        (acc, r) => (acc._1 + 1L, math.max(acc._2, r.getInt(0))),
+        (x, y) => (x._1 + y._1, math.max(x._2, y._2)))
+
   /** Byte-budget gate for the embedding driver twins: rows ×
-    * (8 + 4·dim) packed payload against [[DriverCutoff.budgetBytes]]
-    * — the kcenterSelect contract. Returns the collected corpus when
-    * it fits, None above the budget. */
-  private def collectEmbsUnder(embs: DataFrame, budget: Long)
+    * (8 + 4·dim) packed payload against `1/shares` of the
+    * [[DriverCutoff]] budget. One probe, then the collect only on the
+    * driver route: the collected corpus when it fits, None above. */
+  private def collectEmbsUnder(embs: DataFrame, shares: Int = 1)
       : Option[Array[(Long, Array[Float])]] = {
     val corpus = embs.select(col("vec_id"), col("embedding"))
-    val nRows = corpus.count()
-    val dim = corpus.limit(1).collect().headOption
-      .map(_.getSeq[Float](1).length).getOrElse(0)
-    if (nRows * (8L + 4L * dim) <= budget)
+    val (nRows, dim) = embShape(corpus)
+    if (DriverCutoff.onDriver(nRows,
+        DriverCutoff.rows(shares * (8L + 4L * dim))))
       Some(corpus.collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
     else None
@@ -629,9 +637,7 @@ object Similarity {
     * centroids.count) so the capacity formula is a literal, never a
     * driver-side action. */
   def cappedAssignTo(embs: DataFrame, cents: DataFrame, nlist: Int,
-                     rounds: Int = 3,
-                     driverBudget: Long = DriverCutoff.budgetBytes)
-      : DataFrame = {
+                     rounds: Int = 3): DataFrame = {
     // size-adaptive driver twin ([[DriverCutoff]]): the distributed
     // acceptance loop pays ~10 checkpoint/collect jobs per call over
     // KB-scale frames at sf0.1 (profiled: emb_capped_lloyd = 78 jobs
@@ -641,16 +647,14 @@ object Similarity {
     // same integer formula — so the assignment is byte-equal
     // (Round13Spec pins the boundary). Above the budget the
     // distributed rounds run UNCHANGED.
-    collectEmbsUnder(embs, driverBudget) match {
+    collectEmbsUnder(embs) match {
       case Some(vecs) =>
-        val spark = embs.sparkSession
-        import spark.implicits._
         val centArr = cents
           .select(col("centroid_id").cast("long"), col("c_emb"))
           .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
         val asg = assignDrv(vecs, centArr, nlist, rounds)
-        return spark.sparkContext.parallelize(asg.toSeq, 32)
-          .toDF("vec_id", "centroid_id", "cos_sim", "pref_used")
+        return DriverCutoff.frame(embs.sparkSession, asg.toSeq,
+          "vec_id", "centroid_id", "cos_sim", "pref_used")
       case None => ()
     }
     val centsRow = cents.agg(
@@ -730,9 +734,7 @@ object Similarity {
     * at the build SF). Returns the FINAL capped assignment
     * (vec_id, centroid_id, cos_sim, pref_used). */
   def cappedLloyd(embs: DataFrame, nlist: Int = 16, iters: Int = 2,
-                  rounds: Int = 3,
-                  driverBudget: Long = DriverCutoff.budgetBytes)
-      : DataFrame = {
+                  rounds: Int = 3): DataFrame = {
     // size-adaptive driver twin for the WHOLE alternation (not just
     // the per-iteration assignment): below the byte budget the
     // corpus collects once and both halves run in memory — the
@@ -742,12 +744,9 @@ object Similarity {
     // mattered) and the identical (s.toDouble / n / 1e6).toFloat
     // reconstruction. Byte-equal (Round13Spec); above the budget the
     // distributed alternation below runs UNCHANGED.
-    collectEmbsUnder(embs, driverBudget) match {
+    collectEmbsUnder(embs) match {
       case Some(vecs) =>
-        val spark = embs.sparkSession
-        import spark.implicits._
         var centArr = vecs.filter(_._1 < nlist)
-          .map { case (id, v) => (id, v) }
         var asg: Array[(Long, Long, Double, Long)] = null
         val byId = vecs.toMap
         for (i <- 1 to iters) {
@@ -771,8 +770,8 @@ object Similarity {
             }
           }
         }
-        return spark.sparkContext.parallelize(asg.toSeq, 32)
-          .toDF("vec_id", "centroid_id", "cos_sim", "pref_used")
+        return DriverCutoff.frame(embs.sparkSession, asg.toSeq,
+          "vec_id", "centroid_id", "cos_sim", "pref_used")
       case None => ()
     }
     var cents = embs.filter(col("vec_id") < nlist)
@@ -780,7 +779,7 @@ object Similarity {
       .localCheckpoint()
     var asg: DataFrame = null
     for (i <- 1 to iters) {
-      asg = cappedAssignTo(embs, cents, nlist, rounds, driverBudget)
+      asg = cappedAssignTo(embs, cents, nlist, rounds)
       if (i < iters) {
         cents = asg.select("vec_id", "centroid_id")
           .join(embs.select(col("vec_id"), col("embedding")), "vec_id")
@@ -904,8 +903,7 @@ object Similarity {
       .toDF("dim", "loading").select(col("dim"), col("loading"))
   }
 
-  private[graft] def pcaAxis(embs: DataFrame, iters: Int,
-                             driverBudget: Long = DriverCutoff.budgetBytes)
+  private[graft] def pcaAxis(embs: DataFrame, iters: Int)
       : (Array[Double], Array[Double]) = {
     // size-adaptive driver twin ([[DriverCutoff]]): the distributed
     // axis build pays 1 + iters sequential scan+collect jobs
@@ -917,7 +915,7 @@ object Similarity {
     // column, and the normalization is the identical IEEE sequence —
     // axis byte-equal (Round13Spec). Above the budget the scans run
     // UNCHANGED.
-    collectEmbsUnder(embs, driverBudget) match {
+    collectEmbsUnder(embs) match {
       case Some(vecs) if vecs.nonEmpty =>
         val dims = vecs(0)._2.length
         val n = vecs.length.toLong
@@ -1143,9 +1141,7 @@ object Similarity {
   def graphSearchTopK(embs: DataFrame, queries: DataFrame, k: Int = 5,
                       knnK: Int = 5, beam: Int = 16, hops: Int = 5,
                       nprobe: Int = 4, targetList: Int = 200,
-                      rounds: Int = 3,
-                      driverBudget: Long = DriverCutoff.budgetBytes)
-      : DataFrame = {
+                      rounds: Int = 3): DataFrame = {
     val clustered = cappedClusters(embs, targetList, rounds)
     val g = knnGraphCappedShared(embs, knnK, targetList, rounds)
       .select(col("src_id"), col("dst_id"))
@@ -1159,12 +1155,9 @@ object Similarity {
     // inputs are the cached cluster membership and kNN arcs (both
     // O(n)) plus the query panel; above the budget the distributed
     // hops run UNCHANGED. Byte-equal: Round13Spec pins the boundary.
-    (collectEmbsUnder(embs, driverBudget / 2),
-      collectEmbsUnder(queries.select(col("vec_id"), col("embedding")),
-        driverBudget / 2)) match {
+    (collectEmbsUnder(embs, shares = 2),
+      collectEmbsUnder(queries, shares = 2)) match {
       case (Some(vecs), Some(qsArr)) =>
-        val spark = embs.sparkSession
-        import spark.implicits._
         import scala.collection.mutable
         val byId = vecs.toMap
         val n = vecs.length.toLong
@@ -1212,8 +1205,8 @@ object Similarity {
             .zipWithIndex.foreach { case ((v, cs), idx) =>
               out += ((qid, idx + 1L, v, cs)) }
         }
-        return spark.sparkContext.parallelize(out.toSeq, 32)
-          .toDF("query_id", "rank", "neighbor_id", "cos_sim")
+        return DriverCutoff.frame(embs.sparkSession, out.toSeq,
+          "query_id", "rank", "neighbor_id", "cos_sim")
       case _ => ()
     }
     val q = queries.select(col("vec_id").as("query_id"),
@@ -1750,9 +1743,7 @@ object Similarity {
     * step, no driver loop over data. The k sequential steps are
     * MMR's definition (each pick conditions on all previous). */
   def mmrRerank(embs: DataFrame, queries: DataFrame, pool: Int = 16,
-                k: Int = 5, lambda: Double = 0.5,
-                driverBudget: Long = DriverCutoff.budgetBytes)
-      : DataFrame = {
+                k: Int = 5, lambda: Double = 0.5): DataFrame = {
     val withEmbLazy = bruteForceTopK(embs, queries, pool)
       .join(embs.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("c_emb")), "neighbor_id")
@@ -1768,15 +1759,9 @@ object Similarity {
     // cosines, the same λ·rel − (1−λ)·maxSim IEEE sequence, (score
     // desc, id asc) picks. Byte-equal (Round13Spec). Above the
     // budget the unrolled distributed steps run UNCHANGED.
-    val poolBytes = {
-      val nQ = queries.count()
-      val dim = embs.select(col("embedding")).limit(1).collect()
-        .headOption.map(_.getSeq[Float](0).length).getOrElse(0)
-      nQ * pool * (24L + 4L * dim)
-    }
-    if (poolBytes <= driverBudget) {
-      val spark = embs.sparkSession
-      import spark.implicits._
+    // one probe: the panel's size and width (queries are corpus rows)
+    val (nQ, dim) = embShape(queries)
+    if (DriverCutoff.onDriver(nQ * pool, DriverCutoff.rows(24L + 4L * dim))) {
       import scala.collection.mutable
       val rowsArr = withEmbLazy.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2),
@@ -1818,8 +1803,8 @@ object Similarity {
           }
         }
       }
-      return spark.sparkContext.parallelize(out.toSeq, 32)
-        .toDF("query_id", "pos", "neighbor_id", "mmr_score")
+      return DriverCutoff.frame(embs.sparkSession, out.toSeq,
+        "query_id", "pos", "neighbor_id", "mmr_score")
     }
     val withEmb = withEmbLazy.localCheckpoint()
     val sims = withEmb.as("a")
@@ -1884,9 +1869,7 @@ object Similarity {
     * sequential passes are the algorithm's DEFINITION (each pick
     * depends on all previous); parallel variants trade the
     * approximation bound away. */
-  def kcenterSelect(embs: DataFrame, k: Int = 16,
-                    driverCutoff: Long = DriverCutoff.budgetBytes)
-      : DataFrame = {
+  def kcenterSelect(embs: DataFrame, k: Int = 16): DataFrame = {
     val spark = embs.sparkSession
     import spark.implicits._
     // measured r12: checkpointing this projection to spare the k
@@ -1899,14 +1882,9 @@ object Similarity {
     // java.lang.Double ordering, floor(d2·1e6) radii. Byte-equal;
     // Round12Spec pins the boundary. Above the budget the k-pass
     // broadcast-argmax scan runs unchanged (the 100 TB shape).
-    val corpus = embs.select(col("vec_id"), col("embedding"))
-    val nRows = corpus.count()
-    val dim = corpus.limit(1).collect().headOption
-      .map(_.getSeq[Float](1).length).getOrElse(0)
-    if (nRows * (8L + 4L * dim) <= driverCutoff) {
-      val vecs = corpus.collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        .sortBy(_._1)
+    val collected = collectEmbsUnder(embs)
+    if (collected.isDefined) {
+      val vecs = collected.get.sortBy(_._1)
       val picks =
         scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Long])]()
       if (vecs.nonEmpty) {
@@ -1925,7 +1903,7 @@ object Similarity {
             val v = vecs(i)._2
             var d2 = 0.0
             var j = 0
-            while (j < dim) {
+            while (j < newest.length) {
               val d = v(j).toDouble - newest(j).toDouble
               d2 += d * d
               j += 1
@@ -1947,6 +1925,7 @@ object Similarity {
       }
       return picks.toSeq.toDF("rank", "vec_id", "radius2_scaled")
     }
+    val corpus = embs.select(col("vec_id"), col("embedding"))
     // headOption, not head: an empty corpus returns the empty
     // selection; a corpus smaller than k returns the partial one
     val seedOpt = corpus.orderBy("vec_id").limit(1)

@@ -513,16 +513,16 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("cappedAssign: each round materializes once — final plan unions checkpoint scans") {
-    // driverBudget = 0 forces the DISTRIBUTED path (the r13 driver
-    // twin would otherwise return a parallelized result below the
-    // byte budget) — this gate inspects the 100 TB plan shape
+    // a zero driver budget forces the DISTRIBUTED path (the r13
+    // driver twin would otherwise return a parallelized result below
+    // the byte budget) — this gate inspects the 100 TB plan shape
     val embs = Tables.embeddings(spark, sf)
     val nlist = 16
-    val p = plan(Similarity.cappedAssignTo(embs,
+    val p = plan(DriverCutoff.withBudget(0L)(Similarity.cappedAssignTo(embs,
       embs.filter(col("vec_id") < nlist)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("c_emb")),
-      nlist, driverBudget = 0L))
+      nlist)))
     // the acceptance rounds are localCheckpointed as they complete, so
     // the result must be a pure union of the materialized round
     // frames: no join, window, or preference recomputation downstream

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Graph
+import graft.operators.{DriverCutoff, Graph}
 import graft.sources.Tables
 
 /** Round-10 additions: the KEY-LEVEL SCC/SSSP family over the
@@ -54,12 +54,14 @@ class Round10Spec extends AnyFunSuite {
       6L -> ((6L, 4L)), 7L -> ((6L, 4L)),
       8L -> ((6L, 4L)), 9L -> ((6L, 4L)),
       10L -> ((10L, 1L)), 11L -> ((11L, 1L)), 12L -> ((12L, 1L)))
-    for (cutoff <- Seq(2000000L, 0L)) { // driver Tarjan / FW-BW-trim
-      val got = Graph.sccKeysTrade(li, ord, driverCutoff = cutoff)
+    // driver Tarjan / FW-BW-trim
+    for (budget <- Seq(DriverCutoff.budgetBytes, 0L)) {
+      val got = DriverCutoff.withBudget(budget)(
+          Graph.sccKeysTrade(li, ord))
         .collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
         .toMap
-      assert(got === expected, s"cutoff $cutoff")
+      assert(got === expected, s"budget $budget")
     }
   }
 
@@ -75,13 +77,13 @@ class Round10Spec extends AnyFunSuite {
       2L -> (("cust", 0L)), 3L -> (("supp", 500000L)),
       5L -> (("supp", 500000L)), 4L -> (("cust", 1000000L)),
       10L -> (("cust", 0L)), 11L -> (("supp", 500000L)))
-    for (cutoff <- Seq(2000000L, 0L)) {
-      val got = Graph.ssspKeysTrade(li, ord, customer, nation,
-          driverCutoff = cutoff)
+    for (budget <- Seq(DriverCutoff.budgetBytes, 0L)) {
+      val got = DriverCutoff.withBudget(budget)(
+          Graph.ssspKeysTrade(li, ord, customer, nation))
         .collect()
         .map(r => r.getLong(1) -> ((r.getString(0), r.getLong(2))))
         .toMap
-      assert(got === expected, s"cutoff $cutoff")
+      assert(got === expected, s"budget $budget")
     }
   }
 
@@ -110,12 +112,12 @@ class Round10Spec extends AnyFunSuite {
     def sortedRows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val sccDriver = Graph.sccKeysTrade(li, ord)
-    val sccDist = Graph.sccKeysTrade(li, ord, driverCutoff = 0L)
+    val sccDist = DriverCutoff.withBudget(0L)(Graph.sccKeysTrade(li, ord))
     assert(sortedRows(sccDriver) === sortedRows(sccDist))
     assert(sccDriver.count() > 0, "sf0.001 must yield an edged graph")
     val ssspDriver = Graph.ssspKeysTrade(li, ord, cust, nat)
-    val ssspDist = Graph.ssspKeysTrade(li, ord, cust, nat,
-      driverCutoff = 0L)
+    val ssspDist = DriverCutoff.withBudget(0L)(
+      Graph.ssspKeysTrade(li, ord, cust, nat))
     assert(sortedRows(ssspDriver) === sortedRows(ssspDist))
   }
 }

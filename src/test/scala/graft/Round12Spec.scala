@@ -117,35 +117,35 @@ class Round12Spec extends AnyFunSuite {
     // chain + singleton: 1-2-3, 4-5, isolated 9
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc1", "doc2")
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("doc_id")
-    def run(cut: Long) =
-      Dedup.connectedComponents(pairs, nodes, driverCutoff = cut)
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
+        Dedup.connectedComponents(pairs, nodes))
         .orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(run(0L) == run(DriverCutoff.pairRows),
+    assert(run(0L) == run(DriverCutoff.budgetBytes),
       "driver and distributed paths must emit byte-equal labelings")
   }
 
   test("cutoff boundary: landmark family (betweenness/eccentricity/" +
        "hop histogram) byte-equal across paths") {
     val (li, ord) = fixture
-    def bw(cut: Long) =
-      Graph.betweennessKeysTrade(li, ord, driverCutoff = cut)
+    def bw(budget: Long) = DriverCutoff.withBudget(budget)(
+        Graph.betweennessKeysTrade(li, ord))
         .orderBy("node").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    def ecc(cut: Long) =
-      Graph.eccentricityKeysTrade(li, ord, driverCutoff = cut)
+    def ecc(budget: Long) = DriverCutoff.withBudget(budget)(
+        Graph.eccentricityKeysTrade(li, ord))
         .orderBy("node").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSeq
-    def hh(cut: Long) =
-      Graph.hopHistogramKeysTrade(li, ord, driverCutoff = cut)
+    def hh(budget: Long) = DriverCutoff.withBudget(budget)(
+        Graph.hopHistogramKeysTrade(li, ord))
         .orderBy("h").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    FrameCache.invalidateAll(spark) // distinct lbfs keys per cutoff
-    assert(bw(0L) == bw(DriverCutoff.pairRows),
+    FrameCache.invalidateAll(spark) // distinct lbfs keys per budget
+    assert(bw(0L) == bw(DriverCutoff.budgetBytes),
       "driver Brandes and the distributed level loops must agree")
-    assert(ecc(0L) == ecc(DriverCutoff.pairRows))
-    assert(hh(0L) == hh(DriverCutoff.pairRows))
+    assert(ecc(0L) == ecc(DriverCutoff.budgetBytes))
+    assert(hh(0L) == hh(DriverCutoff.budgetBytes))
     FrameCache.invalidateAll(spark)
   }
 
@@ -166,14 +166,11 @@ class Round12Spec extends AnyFunSuite {
     def rows(df: DataFrame, sort: String*) =
       df.orderBy(sort.map(col): _*).collect().map(_.toSeq).toSeq
     FrameCache.invalidateAll(spark)
-    val bfs0 = rows(Graph.bfsTrade(li, ord, sup, nat,
-      driverCutoff = 0L), "hop")
-    val hits0 = rows(Graph.hitsTrade(li, ord, driverCutoff = 0L),
-      "role", "node")
-    val core0 = rows(Graph.kCoreTrade(li, ord, k = 2,
-      driverCutoff = 0L), "round")
-    val truss0 = rows(Graph.kTrussTrade(li, ord, k = 4,
-      driverCutoff = 0L), "round")
+    val (bfs0, hits0, core0, truss0) = DriverCutoff.withBudget(0L)((
+      rows(Graph.bfsTrade(li, ord, sup, nat), "hop"),
+      rows(Graph.hitsTrade(li, ord), "role", "node"),
+      rows(Graph.kCoreTrade(li, ord, k = 2), "round"),
+      rows(Graph.kTrussTrade(li, ord, k = 4), "round")))
     assert(rows(Graph.bfsTrade(li, ord, sup, nat), "hop") == bfs0)
     assert(rows(Graph.hitsTrade(li, ord), "role", "node") == hits0)
     assert(rows(Graph.kCoreTrade(li, ord, k = 2), "round") == core0)
@@ -196,16 +193,17 @@ class Round12Spec extends AnyFunSuite {
     def rows(df: DataFrame) =
       df.collect().map(_.toSeq).toSeq // already top-k ordered
     FrameCache.invalidateAll(spark)
-    // certificateFloor = 0 forces the τ̂ certificate path even on
+    // a zero driver budget forces the τ̂ certificate path even on
     // this tiny fan-out; default skips it — results must be equal
-    val cn0 = rows(Graph.commonNeighbors(li, ord,
-      certificateFloor = 0L))
+    val cn0 = DriverCutoff.withBudget(0L)(
+      rows(Graph.commonNeighbors(li, ord)))
     assert(rows(Graph.commonNeighbors(li, ord)) == cn0,
       "certificate-skipped top-k must equal the certificated one")
-    val ra0 = rows(Graph.resourceAllocation(li, ord,
-      certificateFloor = 0L))
+    val ra0 = DriverCutoff.withBudget(0L)(
+      rows(Graph.resourceAllocation(li, ord)))
     assert(rows(Graph.resourceAllocation(li, ord)) == ra0)
-    val aa0 = rows(Graph.adamicAdar(li, ord, certificateFloor = 0L))
+    val aa0 = DriverCutoff.withBudget(0L)(
+      rows(Graph.adamicAdar(li, ord)))
     assert(rows(Graph.adamicAdar(li, ord)) == aa0)
     // weight spot checks — the top pair is (1,5): it shares the two
     // CAPPED-DEGREE-2 suppliers {12, 13}, which RA/AA weight above
@@ -239,21 +237,19 @@ class Round12Spec extends AnyFunSuite {
       df.orderBy("node").collect().map(_.toSeq).toSeq
     FrameCache.invalidateAll(spark)
     val scc0 = rowsOf(Graph.sccTrade(li, ord, cust, sup, nat))
-    val topo0 = rowsOf(Graph.topoLayersTrade(li, ord, cust, sup, nat,
-      driverCutoff = 0L))
-    val sssp0 = rowsOf(Graph.ssspTrade(li, ord, cust, sup, nat,
-      driverCutoff = 0L))
-    val close0 = rowsOf(Graph.closenessTrade(li, ord, cust, sup, nat,
-      driverCutoff = 0L))
+    val (topo0, sssp0, close0) = DriverCutoff.withBudget(0L)((
+      rowsOf(Graph.topoLayersTrade(li, ord, cust, sup, nat)),
+      rowsOf(Graph.ssspTrade(li, ord, cust, sup, nat)),
+      rowsOf(Graph.closenessTrade(li, ord, cust, sup, nat))))
     assert(rowsOf(Graph.topoLayersTrade(li, ord, cust, sup, nat))
       == topo0, "topo driver twin must equal the distributed loop")
     assert(rowsOf(Graph.ssspTrade(li, ord, cust, sup, nat)) == sssp0)
     assert(rowsOf(Graph.closenessTrade(li, ord, cust, sup, nat))
       == close0)
-    def prRows(cut: Long) =
-      Graph.pageRankTrade(li, ord, cust, sup, nat, driverCutoff = cut)
+    def prRows(budget: Long) = DriverCutoff.withBudget(budget)(
+        Graph.pageRankTrade(li, ord, cust, sup, nat))
         .orderBy("n_name").collect().map(_.toSeq).toSeq
-    assert(prRows(DriverCutoff.weightedArcRows) == prRows(0L),
+    assert(prRows(DriverCutoff.budgetBytes) == prRows(0L),
       "pagerank driver twin must equal the distributed ppm rounds")
     // scc: A,B,C form one component labeled min id 0; D is its own
     assert(scc0.map(r => (r(1), r(2))) ==
@@ -275,8 +271,8 @@ class Round12Spec extends AnyFunSuite {
       (2L, Array(0.0f, 3.0f)), (3L, Array(1.0f, 1.0f)),
       (5L, Array(2.0f, 2.5f)), (6L, Array(2.5f, 2.0f)))
       .toDF("vec_id", "embedding")
-    def rows(cut: Long) =
-      Similarity.kcenterSelect(embs, k = 5, driverCutoff = cut)
+    def rows(budget: Long) = DriverCutoff.withBudget(budget)(
+        Similarity.kcenterSelect(embs, k = 5))
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq
@@ -286,16 +282,15 @@ class Round12Spec extends AnyFunSuite {
 
   test("cutoff boundary: keyed SSSP byte-equal across paths") {
     val (li, ord) = fixture
-    def run(cut: Long) =
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
       Graph.ssspKeysTrade(li, ord,
         customer = Seq((1L, 0L), (2L, 0L), (3L, 1L))
           .toDF("c_custkey", "c_nationkey"),
         nation = Seq((0L, "ALPHA"), (1L, "BETA"))
-          .toDF("n_nationkey", "n_name"),
-        driverCutoff = cut)
+          .toDF("n_nationkey", "n_name")))
         .orderBy("node").collect()
         .map(r => (r.getLong(1), r.getLong(2))).toSeq
-    assert(run(0L) == run(DriverCutoff.weightedArcRows))
+    assert(run(0L) == run(DriverCutoff.budgetBytes))
   }
 
   // ---------------- arc-free guards ----------------

@@ -33,11 +33,11 @@ class Round13Spec extends AnyFunSuite {
   test("cutoff boundary: pageRankKeysTrade byte-equal across paths") {
     FrameCache.invalidateAll(spark)
     val (li, ord) = fixture
-    def run(cut: Long) = Graph
-      .pageRankKeysTrade(li, ord, driverCutoff = cut)
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
+        Graph.pageRankKeysTrade(li, ord))
       .orderBy("node").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val driver = run(DriverCutoff.pairRows)
+    val driver = run(DriverCutoff.budgetBytes)
     val distributed = run(0L)
     assert(driver === distributed,
       "driver twin diverges from the distributed rounds")
@@ -53,11 +53,11 @@ class Round13Spec extends AnyFunSuite {
       (5L, 0L), (6L, 1L)).toDF("c_custkey", "c_nationkey")
     val nation = Seq((0L, "AAA"), (1L, "BBB"))
       .toDF("n_nationkey", "n_name")
-    def run(cut: Long) = Graph
-      .pprKeysTrade(li, ord, customer, nation, driverCutoff = cut)
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
+        Graph.pprKeysTrade(li, ord, customer, nation))
       .orderBy("node").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val driver = run(DriverCutoff.pairRows)
+    val driver = run(DriverCutoff.budgetBytes)
     val distributed = run(0L)
     assert(driver === distributed,
       "driver twin diverges from the distributed loop")
@@ -80,8 +80,8 @@ class Round13Spec extends AnyFunSuite {
       .select(org.apache.spark.sql.functions.col("vec_id")
           .as("centroid_id"),
         org.apache.spark.sql.functions.col("embedding").as("c_emb"))
-    def run(budget: Long) = Similarity
-      .cappedAssignTo(embs, cents, nlist, driverBudget = budget)
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
+        Similarity.cappedAssignTo(embs, cents, nlist))
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSeq
@@ -96,8 +96,8 @@ class Round13Spec extends AnyFunSuite {
       "(mean update floor-sums and reconstruction included)") {
     val embs = graft.sources.Tables
       .embeddings(spark, "/root/testdata/sf0.01")
-    def run(budget: Long) = Similarity
-      .cappedLloyd(embs, nlist = 16, iters = 2, driverBudget = budget)
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
+        Similarity.cappedLloyd(embs, nlist = 16, iters = 2))
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSeq
@@ -114,8 +114,8 @@ class Round13Spec extends AnyFunSuite {
       .embeddings(spark, "/root/testdata/sf0.01")
     val queries = embs.filter(
       org.apache.spark.sql.functions.col("vec_id") % 97 === 0)
-    def run(budget: Long) = Similarity
-      .graphSearchTopK(embs, queries, k = 3, driverBudget = budget)
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
+        Similarity.graphSearchTopK(embs, queries, k = 3))
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSeq
@@ -132,8 +132,8 @@ class Round13Spec extends AnyFunSuite {
       .embeddings(spark, "/root/testdata/sf0.01")
     val queries = embs.filter(
       org.apache.spark.sql.functions.col("vec_id") % 97 === 0)
-    def run(budget: Long) = Similarity
-      .mmrRerank(embs, queries, k = 4, driverBudget = budget)
+    def run(budget: Long) = DriverCutoff.withBudget(budget)(
+        Similarity.mmrRerank(embs, queries, k = 4))
       .orderBy("query_id", "pos").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSeq
@@ -148,10 +148,10 @@ class Round13Spec extends AnyFunSuite {
       "(quantized mean, kernel contributions, normalization)") {
     val embs = graft.sources.Tables
       .embeddings(spark, "/root/testdata/sf0.01")
-    val (muD, vD) = Similarity.pcaAxis(embs, iters = 3,
-      driverBudget = DriverCutoff.budgetBytes)
-    val (muX, vX) = Similarity.pcaAxis(embs, iters = 3,
-      driverBudget = 0L)
+    val (muD, vD) = DriverCutoff.withBudget(DriverCutoff.budgetBytes)(
+      Similarity.pcaAxis(embs, iters = 3))
+    val (muX, vX) = DriverCutoff.withBudget(0L)(
+      Similarity.pcaAxis(embs, iters = 3))
     assert(muD.toSeq === muX.toSeq, "means diverge across the cutoff")
     assert(vD.toSeq === vX.toSeq, "axis diverges across the cutoff")
     assert(vD.nonEmpty)

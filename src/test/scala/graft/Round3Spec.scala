@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AsOf, Dedup, Reactive, Signals, Similarity, TextAnalysis}
+import graft.operators.{AsOf, Dedup, DriverCutoff, Reactive, Signals, Similarity,
+  TextAnalysis}
 
 /** Regression tests for the round-3 advisory fixes. */
 class Round3Spec extends AnyFunSuite {
@@ -60,15 +61,15 @@ class Round3Spec extends AnyFunSuite {
     val pairs = (0L until 9L).map(i => (i, i + 1))
       .toDF("doc1", "doc2")
     val nodes = (0L to 9L).map(Tuple1(_)).toDF("doc_id")
-    // driverCutoff = 0 forces the distributed loop (the r8 adaptive
-    // union-find would solve a 10-node chain driver-side)
+    // a zero driver budget forces the distributed loop (the r8
+    // adaptive union-find would solve a 10-node chain driver-side)
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(pairs, nodes, maxIter = 2,
-        driverCutoff = 0L).collect()
+      DriverCutoff.withBudget(0L)(
+        Dedup.connectedComponents(pairs, nodes, maxIter = 2)).collect()
     }
     // and with enough rounds the same chain collapses to one cluster
-    val ok = Dedup.connectedComponents(pairs, nodes, maxIter = 12,
-        driverCutoff = 0L)
+    val ok = DriverCutoff.withBudget(0L)(
+        Dedup.connectedComponents(pairs, nodes, maxIter = 12))
       .select("cluster_id").distinct().collect()
     assert(ok.map(_.getLong(0)).toSet === Set(0L))
   }
@@ -394,17 +395,17 @@ class Round3Spec extends AnyFunSuite {
     // plain propagation moves the minimum one hop per round, so a
     // depth-29 chain would need 30 rounds; path halving doubles the
     // travel per round — 10 rounds MUST now suffice (this asserted a
-    // throw at 10 before the jump step existed). driverCutoff = 0
+    // throw at 10 before the jump step existed). A zero driver budget
     // forces the loop under test (r8 added the small-set fast path).
-    val labels = Dedup.connectedComponents(chain, nodes, maxIter = 10,
-        driverCutoff = 0L)
+    val labels = DriverCutoff.withBudget(0L)(
+        Dedup.connectedComponents(chain, nodes, maxIter = 10))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 30L).forall(labels(_) == 1L))
     // and the non-convergence contract still holds when the budget
     // genuinely can't cover the doubling distance
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, nodes, maxIter = 2,
-        driverCutoff = 0L).collect()
+      DriverCutoff.withBudget(0L)(
+        Dedup.connectedComponents(chain, nodes, maxIter = 2)).collect()
     }
   }
 

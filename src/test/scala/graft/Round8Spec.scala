@@ -216,7 +216,8 @@ class Round8Spec extends AnyFunSuite {
       (40L to 42L)).map(Tuple1(_)).toDF("doc_id")
     val fast = Dedup.connectedComponents(pairs, nodes)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val loop = Dedup.connectedComponents(pairs, nodes, driverCutoff = 0L)
+    val loop = DriverCutoff.withBudget(0L)(
+        Dedup.connectedComponents(pairs, nodes))
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(fast.toSeq === loop.toSeq)
     val m = fast.toMap
