@@ -40,7 +40,7 @@ object GraftSession {
       // probes can still flip it off per session, and
       // SPARK_GRAFT_FAST_MONEY=false A/Bs the DECIMAL route.
       .config("spark.graft.fastMoneySums",
-        sys.env.getOrElse("SPARK_GRAFT_FAST_MONEY", "true"))
+        fastMoneySums(sys.env.get("SPARK_GRAFT_FAST_MONEY")))
       // 160+ gated queries are ~500 whole-stage-codegen stages; the
       // default 100-entry generated-class cache evicts constantly and
       // every run re-Janino-compiles nearly every stage. Static conf:
@@ -54,6 +54,17 @@ object GraftSession {
       // optimizer rewrite + the planner strategy for its physical node
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+
+  /** The `spark.graft.fastMoneySums` value for a SPARK_GRAFT_FAST_MONEY
+    * setting: `true` when unset, else `true` or `false` in any case.
+    * Anything else fails the session build here, instead of every
+    * money query failing at plan time. */
+  private[graft] def fastMoneySums(env: Option[String]): String =
+    env.getOrElse("true").toLowerCase(java.util.Locale.ROOT) match {
+      case v @ ("true" | "false") => v
+      case _ => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_FAST_MONEY must be true or false, got '${env.get}'")
+    }
 
   def get(): SparkSession = {
     val spark = builder().getOrCreate()

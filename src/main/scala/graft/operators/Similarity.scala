@@ -913,41 +913,48 @@ object Similarity {
     // the per-dim reductions are commutative Long sums rendered
     // through BigDecimal.doubleValue exactly like the DECIMAL(38,0)
     // column, and the normalization is the identical IEEE sequence —
-    // axis byte-equal (Round13Spec). Above the budget the scans run
-    // UNCHANGED.
+    // axis byte-equal (Round13Spec). The Long sums are exact
+    // (Math.addExact): one that would overflow, where the DECIMAL
+    // column would not, sends the call down the distributed route.
+    // Above the budget the scans run UNCHANGED.
     collectEmbsUnder(embs) match {
       case Some(vecs) if vecs.nonEmpty =>
-        val dims = vecs(0)._2.length
-        val n = vecs.length.toLong
-        val muSum = new Array[Long](dims)
-        vecs.foreach { case (_, e) =>
-          var d = 0
-          while (d < dims) {
-            muSum(d) += math.floor(e(d).toDouble * 1e6).toLong
-            d += 1
-          }
-        }
-        val mu = muSum.map(s =>
-          new java.math.BigDecimal(s).doubleValue() / n / 1e6)
-        var v = Array.fill(dims)(1.0)
-        val wrapped = vecs.map { case (_, e) =>
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(e) }
-        for (_ <- 1 to iters) {
-          val wSum = new Array[Long](dims)
-          wrapped.foreach { arr =>
-            val c = graft.functions.Kernels
-              .centeredPowerContrib(arr, mu, v)
+        try {
+          val dims = vecs(0)._2.length
+          val n = vecs.length.toLong
+          val muSum = new Array[Long](dims)
+          vecs.foreach { case (_, e) =>
             var d = 0
-            while (d < dims) { wSum(d) += c.getLong(d); d += 1 }
+            while (d < dims) {
+              muSum(d) = Math.addExact(muSum(d),
+                math.floor(e(d).toDouble * 1e6).toLong)
+              d += 1
+            }
           }
-          val w = wSum.map(s =>
-            new java.math.BigDecimal(s).doubleValue() / 1e6)
-          var ss = 0.0
-          w.foreach(x => ss += x * x)
-          val norm = math.sqrt(ss)
-          v = w.map(_ / norm)
-        }
-        return (mu, v)
+          val mu = muSum.map(s =>
+            new java.math.BigDecimal(s).doubleValue() / n / 1e6)
+          var v = Array.fill(dims)(1.0)
+          val wrapped = vecs.map { case (_, e) =>
+            new org.apache.spark.sql.catalyst.util.GenericArrayData(e) }
+          for (_ <- 1 to iters) {
+            val wSum = new Array[Long](dims)
+            wrapped.foreach { arr =>
+              val c = graft.functions.Kernels
+                .centeredPowerContrib(arr, mu, v)
+              var d = 0
+              while (d < dims) {
+                wSum(d) = Math.addExact(wSum(d), c.getLong(d)); d += 1
+              }
+            }
+            val w = wSum.map(s =>
+              new java.math.BigDecimal(s).doubleValue() / 1e6)
+            var ss = 0.0
+            w.foreach(x => ss += x * x)
+            val norm = math.sqrt(ss)
+            v = w.map(_ / norm)
+          }
+          return (mu, v)
+        } catch { case _: ArithmeticException => () }
       case _ => ()
     }
     val big = DecimalType(38, 0)

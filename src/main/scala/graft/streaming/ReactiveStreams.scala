@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -18,8 +19,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale design: all stateful operators key state by `user_id`, so
   * state is sharded across executors by the same single shuffle the
-  * batch forms use. State lifetime is explicit per operator:
-  * deadline ops (debounce, timeoutDetect) evict via event-time
+  * batch forms use. Every keyed operator except withLatestFrom runs
+  * through one private route, [[route]]: it alone reads, writes and
+  * removes `GroupState`, orders each trigger's rows, and arms
+  * event-time timers — re-armed on every call at
+  * max(deadline, watermark + 1), since Spark clears a timer the
+  * function leaves unset and rejects one below the watermark.
+  * State lifetime is explicit per operator:
+  * deadline ops (debounce, timeoutDetect, rateLimitStream,
+  * sessionCappedStream, concurrencyStream) evict via event-time
   * timeouts; enrichment ops (withLatestFrom, combineLatest) take an
   * optional `idleTtl` that evicts keys idle past the TTL — the
   * 100 TB knob, since without it "latest value per key" state grows
@@ -51,6 +59,112 @@ object ReactiveStreams {
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
                 event_type: String, value: Double)
 
+  /** The `events` projection every keyed operator reads. */
+  private def evs(events: DataFrame): Dataset[Ev] =
+    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
+      .as(Encoders.product[Ev])
+
+  private val byUser = (e: Ev) => e.user_id
+  private val byId: Ordering[Ev] = Ordering.by(_.event_id)
+  private val byTime: Ordering[Ev] =
+    Ordering.by(e => (e.ts.getTime, e.event_id))
+
+  /** Money in cents with the batch `dec()` cast's rounding:
+    * BigDecimal.valueOf (Double.toString semantics, what Spark's
+    * cast(DECIMAL) uses; the raw binary expansion would round
+    * 0.004999… differently) then DECIMAL(18,2) HALF_UP. */
+  private def cents(v: Double): Long =
+    java.math.BigDecimal.valueOf(v)
+      .setScale(2, java.math.RoundingMode.HALF_UP)
+      .movePointRight(2).longValueExact()
+
+  /** Event-time eviction of a keyed operator: `deadline` is the key's
+    * eviction time in a given state. Once the watermark passes it,
+    * the route emits `rows` for that state and removes it. */
+  private case class Evict[-K, -S, +O](deadline: S => Long,
+      rows: (K, S) => IterableOnce[O] = (_: Any, _: Any) => Nil)
+
+  /** THE keyed-state route: the only caller of
+    * flatMapGroupsWithState (bar [[withLatestFrom]]), reached through
+    * [[keyed]], [[fold]] and [[consecutive]]. It groups `in` by `key`
+    * and hands `step` the key, its state (None for a new key), the
+    * trigger's rows in `order` and — for timer operators — the
+    * current event-time watermark, then writes back the state `step`
+    * returns. Timers: with `evict`, a key whose deadline the
+    * watermark passes emits `evict.rows` and loses its state; with
+    * `wake`, the step runs again on no rows and the state stays.
+    * Spark clears any timer the function does not set, so the route
+    * re-arms the deadline on every call, at max(deadline,
+    * watermark + 1): an event-time timer must lie above the
+    * watermark. */
+  private def route[T, K: Encoder, S: Encoder, O: Encoder](
+      in: Dataset[T], key: T => K, order: Option[Ordering[T]],
+      mode: OutputMode = OutputMode.Append,
+      evict: Option[Evict[K, S, O]] = None,
+      wake: Option[S => Option[Long]] = None)(
+      step: (K, Option[S], Seq[T], Long) => (S, IterableOnce[O]))
+      : Dataset[O] = {
+    val timed = evict.isDefined || wake.isDefined
+    in.groupByKey(key).flatMapGroupsWithState[S, O](mode,
+      if (timed) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout) {
+      (k: K, rows: Iterator[T], state: GroupState[S]) =>
+        if (state.hasTimedOut && evict.isDefined) {
+          val s = state.get
+          state.remove()
+          evict.get.rows(k, s).iterator
+        } else {
+          val wm = if (timed) state.getCurrentWatermarkMs() else Long.MinValue
+          val seq = rows.toSeq
+          val (s, out) =
+            step(k, state.getOption, order.fold(seq)(seq.sorted(_)), wm)
+          state.update(s)
+          evict.map(_.deadline(s)).orElse(wake.flatMap(_(s)))
+            .foreach(d => state.setTimeoutTimestamp(math.max(d, wm + 1)))
+          out.iterator
+        }
+    }
+  }
+
+  /** [[route]] for a per-trigger step over state that starts at `init`. */
+  private def keyed[T, K: Encoder, S: Encoder, O: Encoder](
+      in: Dataset[T], key: T => K, order: Option[Ordering[T]] = None,
+      mode: OutputMode = OutputMode.Append)(
+      init: S, evict: Option[Evict[K, S, O]] = None,
+      wake: Option[S => Option[Long]] = None)(
+      step: (K, S, Seq[T], Long) => (S, IterableOnce[O])): Dataset[O] =
+    route[T, K, S, O](in, key, order, mode, evict, wake) {
+      (k, st, rows, wm) => step(k, st.getOrElse(init), rows, wm)
+    }
+
+  /** [[route]] for a per-event recurrence: `step` folds each row, in
+    * `order`, into the key's state and returns the rows it emits. */
+  private def fold[T, K: Encoder, S: Encoder, O: Encoder](
+      in: Dataset[T], key: T => K, order: Option[Ordering[T]])(
+      init: S, evict: Option[Evict[K, S, O]] = None)(
+      step: (K, S, T) => (S, IterableOnce[O])): Dataset[O] =
+    keyed(in, key, order)(init, evict) { (k, s0, rows, _) =>
+      var s = s0
+      val out = rows.flatMap { t => val (n, o) = step(k, s, t); s = n; o }
+      (s, out)
+    }
+
+  /** [[route]] for operators whose state is a summary of the user's
+    * previous event (by event_id): `emit` sees each event with its
+    * predecessor's summary, None for the user's first event. */
+  private def consecutive[S: Encoder, O: Encoder](in: Dataset[Ev])(
+      summary: Ev => S, evict: Option[Evict[Long, S, O]] = None)(
+      emit: (Long, Option[S], Ev) => IterableOnce[O]): Dataset[O] = {
+    implicit val userKey: Encoder[Long] = Encoders.scalaLong
+    route[Ev, Long, S, O](in, byUser, Some(byId), evict = evict) {
+      (uid, prev, rows, _) =>
+        val sums = rows.map(summary)
+        val out = rows.zip(prev +: sums.map(Some(_)))
+          .flatMap { case (e, p) => emit(uid, p, e) }
+        (sums.last, out)
+    }
+  }
+
   /** Windowed aggregate with watermark (Rx window/buffer-by-time):
     * append-mode tumbling windows finalize once the watermark passes. */
   def windowedAgg(events: DataFrame, window_ : String = "1 hour",
@@ -74,26 +188,13 @@ object ReactiveStreams {
 
   /** Streaming distinctUntilChanged: emit only elements whose
     * event_type differs from the key's previous element. Per-key
-    * last-value state via flatMapGroupsWithState. */
+    * last-value state (the previous event's type). */
   def distinctUntilChanged(spark: SparkSession, events: DataFrame)
       : Dataset[Ev] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[String, Ev](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[Ev], state: GroupState[String]) =>
-          // micro-batch arrival order is not event order — sort by seq
-          val sorted = rows.toSeq.sortBy(_.event_id)
-          val out = scala.collection.mutable.ArrayBuffer[Ev]()
-          var last = state.getOption
-          sorted.foreach { e =>
-            if (!last.contains(e.event_type)) { out += e; last = Some(e.event_type) }
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
+    consecutive(evs(events))(_.event_type) { (_, last, e) =>
+      if (last.contains(e.event_type)) None else Some(e)
+    }
   }
 
   /** Streaming throttleFirst: at most one element per key per
@@ -101,22 +202,10 @@ object ReactiveStreams {
   def throttleFirst(spark: SparkSession, events: DataFrame,
                     intervalMs: Long = 3600000L): Dataset[Ev] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, Ev](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[Ev], state: GroupState[Long]) =>
-          val sorted = rows.toSeq.sortBy(_.event_id)
-          val out = scala.collection.mutable.ArrayBuffer[Ev]()
-          var windowEnd = state.getOption.getOrElse(Long.MinValue)
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            if (t >= windowEnd) { out += e; windowEnd = t + intervalMs }
-          }
-          state.update(windowEnd)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(Long.MinValue) { (_, windowEnd, e) =>
+      val t = e.ts.getTime
+      if (t >= windowEnd) (t + intervalMs, Some(e)) else (windowEnd, None)
+    }
   }
 
   /** Streaming debounce: an element is emitted only once its key has
@@ -126,35 +215,12 @@ object ReactiveStreams {
   def debounce(spark: SparkSession, events: DataFrame,
                gapMs: Long = 600000L): Dataset[Ev] = {
     import spark.implicits._
-    events
-      .withWatermark("ts", "2 hours")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Pending, Ev](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[Ev], state: GroupState[Pending]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(_.ev)
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = rows.toSeq.sortBy(_.event_id)
-            val out = scala.collection.mutable.ArrayBuffer[Ev]()
-            var pending = state.getOption
-            sorted.foreach { e =>
-              pending.foreach { p =>
-                if (e.ts.getTime - p.ev.ts.getTime >= gapMs) out += p.ev
-              }
-              pending = Some(Pending(e, e.ts.getTime + gapMs))
-            }
-            pending.foreach { p =>
-              state.update(p)
-              state.setTimeoutTimestamp(p.deadlineMs)
-            }
-            out.iterator
-          }
-      }
+    consecutive(evs(events.withWatermark("ts", "2 hours")))(
+        e => Pending(e, e.ts.getTime + gapMs),
+        Some(Evict((p: Pending) => p.deadlineMs,
+          (_: Long, p: Pending) => Some(p.ev)))) { (_, pending, e) =>
+      pending.filter(p => e.ts.getTime - p.ev.ts.getTime >= gapMs).map(_.ev)
+    }
   }
 
   /** Streaming scan: running per-key fold emitted per element. */
@@ -162,20 +228,11 @@ object ReactiveStreams {
                      running_n: Long)
   def scan(spark: SparkSession, events: DataFrame): Dataset[Scanned] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Double, Long), Scanned](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[(Double, Long)]) =>
-          var (acc, n) = state.getOption.getOrElse((0.0, 0L))
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            acc += e.value; n += 1
-            Scanned(e.event_id, uid, acc, n)
-          }
-          state.update((acc, n))
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))((0.0, 0L)) {
+      case (uid, (acc, n), e) =>
+        val s = (acc + e.value, n + 1)
+        (s, Some(Scanned(e.event_id, uid, s._1, s._2)))
+    }
   }
 
   /** Streaming per-key EWMA: the unbounded twin of
@@ -194,21 +251,11 @@ object ReactiveStreams {
   def ewmaStream(spark: SparkSession, events: DataFrame,
                  alpha: Double = 0.25): Dataset[EwmaRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Option[Double], EwmaRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[Option[Double]]) =>
-          var ewma = state.getOption.flatten
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            ewma = Some(ewma.fold(e.value)(s =>
-              alpha * e.value + (1 - alpha) * s))
-            EwmaRow(e.event_id, uid, e.value, ewma.get)
-          }
-          state.update(ewma)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(Option.empty[Double]) {
+      (uid, ewma, e) =>
+        val s = ewma.fold(e.value)(s => alpha * e.value + (1 - alpha) * s)
+        (Some(s), Some(EwmaRow(e.event_id, uid, e.value, s)))
+    }
   }
 
   /** Streaming Holt double exponential smoothing: the unbounded twin
@@ -225,25 +272,14 @@ object ReactiveStreams {
                  alpha: Double = 0.25, beta: Double = 0.25)
       : Dataset[HoltRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Option[(Double, Double)], HoltRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[Option[(Double, Double)]]) =>
-          var st = state.getOption.flatten
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            st = Some(st.fold((e.value, 0.0)) { case (l, t) =>
-              val lNew = alpha * e.value + (1 - alpha) * (l + t)
-              (lNew, beta * (lNew - l) + (1 - beta) * t)
-            })
-            val (l, t) = st.get
-            HoltRow(e.event_id, uid, e.value, l, t, l + t)
-          }
-          state.update(st)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(Option.empty[(Double, Double)]) {
+      (uid, st, e) =>
+        val (l, t) = st.fold((e.value, 0.0)) { case (l, t) =>
+          val lNew = alpha * e.value + (1 - alpha) * (l + t)
+          (lNew, beta * (lNew - l) + (1 - beta) * t)
+        }
+        (Some((l, t)), Some(HoltRow(e.event_id, uid, e.value, l, t, l + t)))
+    }
   }
 
   /** Streaming Bollinger breakout flags: the unbounded twin of
@@ -261,35 +297,25 @@ object ReactiveStreams {
   def bollingerStream(spark: SparkSession, events: DataFrame,
                       window: Int = 8): Dataset[BollingerRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Long], BollingerRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[List[Long]]) =>
-          var ring = state.getOption.getOrElse(Nil) // newest first
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            val x = java.math.BigDecimal.valueOf(e.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .unscaledValue().longValueExact()
-            val frame = x :: ring.take(window - 1)
-            val n = frame.length.toLong
-            // moments as BigInt: the same overflow headroom the
-            // batch op's DECIMAL(38,0) ride gives
-            val sx = frame.foldLeft(BigInt(0))(_ + BigInt(_))
-            val sxx = frame.foldLeft(BigInt(0))((a, v) =>
-              a + BigInt(v) * BigInt(v))
-            val dev = BigInt(n) * BigInt(x) - sx
-            val band =
-              if (dev * dev > (BigInt(n) * sxx - sx * sx) * 4)
-                (if (dev > 0) "above" else "below")
-              else "in"
-            ring = frame
-            BollingerRow(uid, e.event_id, x, n, band)
-          }
-          state.update(ring.take(window - 1))
-          out.iterator
-      }
+    // state: the last window−1 cents, newest first
+    fold(evs(events), byUser, Some(byId))(List.empty[Long]) {
+      (uid, ring, e) =>
+        val x = cents(e.value)
+        val frame = x :: ring.take(window - 1)
+        val n = frame.length.toLong
+        // moments as BigInt: the same overflow headroom the
+        // batch op's DECIMAL(38,0) ride gives
+        val sx = frame.foldLeft(BigInt(0))(_ + BigInt(_))
+        val sxx = frame.foldLeft(BigInt(0))((a, v) =>
+          a + BigInt(v) * BigInt(v))
+        val dev = BigInt(n) * BigInt(x) - sx
+        val band =
+          if (dev * dev > (BigInt(n) * sxx - sx * sx) * 4)
+            (if (dev > 0) "above" else "below")
+          else "in"
+        (frame.take(window - 1),
+          Some(BollingerRow(uid, e.event_id, x, n, band)))
+    }
   }
 
   /** Streaming (running) Theil–Sen trend: the unbounded twin of
@@ -308,30 +334,20 @@ object ReactiveStreams {
   def theilSenStream(spark: SparkSession, events: DataFrame,
                      n: Int = 32): Dataset[TheilSenRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[(Long, Double)], TheilSenRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[List[(Long, Double)]]) =>
-          var pts = state.getOption.getOrElse(Nil) // newest first
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            pts = ((e.event_id, e.value) :: pts).take(n)
-            val asc = pts.reverse.toArray // event_id ascending
-            val slopes = (for {
-              j <- 1 until asc.length
-              i <- 0 until j
-            } yield (asc(j)._2 - asc(i)._2) /
-                (asc(j)._1 - asc(i)._1).toDouble).sorted
-            val med = if (slopes.isEmpty) None
-              else Some(slopes((slopes.length + 1) / 2 - 1))
-            TheilSenRow(uid, e.event_id, asc.length.toLong,
-              slopes.length.toLong, med)
-          }
-          state.update(pts)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(List.empty[(Long, Double)]) {
+      (uid, last, e) =>
+        val pts = ((e.event_id, e.value) :: last).take(n) // newest first
+        val asc = pts.reverse.toArray // event_id ascending
+        val slopes = (for {
+          j <- 1 until asc.length
+          i <- 0 until j
+        } yield (asc(j)._2 - asc(i)._2) /
+            (asc(j)._1 - asc(i)._1).toDouble).sorted
+        val med = if (slopes.isEmpty) None
+          else Some(slopes((slopes.length + 1) / 2 - 1))
+        (pts, Some(TheilSenRow(uid, e.event_id, asc.length.toLong,
+          slopes.length.toLong, med)))
+    }
   }
 
   /** Streaming (running) cadence regularity: the unbounded twin of
@@ -352,48 +368,27 @@ object ReactiveStreams {
   def cadenceStream(spark: SparkSession, events: DataFrame)
       : Dataset[CadenceRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[
-        (Long, Long, Long, Long, Long, Array[Byte]), CadenceRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Long, Long, Long, Long, Array[Byte])]) =>
-          var (lastMs, cnt, sg, mn, mx, sqB) = state.getOption
-            .getOrElse((Long.MinValue, 0L, 0L, Long.MaxValue,
-              Long.MinValue, java.math.BigInteger.ZERO.toByteArray))
-          var sq = new java.math.BigInteger(sqB)
-          val out = rows.toSeq.sortBy(_.event_id).flatMap { e =>
-            val ms = e.ts.getTime
-            val g = if (lastMs == Long.MinValue) 0L else ms - lastMs
-            lastMs = ms
-            if (g > 0) {
-              cnt += 1; sg += g
-              mn = math.min(mn, g); mx = math.max(mx, g)
-              sq = sq.add(java.math.BigInteger.valueOf(g)
-                .multiply(java.math.BigInteger.valueOf(g)))
-            }
-            if (cnt == 0) None
-            else {
-              val cv2 =
-                if (cnt < 2) None
-                else {
-                  val sgB = java.math.BigInteger.valueOf(sg)
-                  Some(java.math.BigInteger.valueOf(cnt)
-                    .multiply(sq)
-                    .multiply(java.math.BigInteger.valueOf(1000000L))
-                    .divide(sgB.multiply(sgB))
-                    .subtract(java.math.BigInteger.valueOf(1000000L))
-                    .longValueExact())
-                }
-              Some(CadenceRow(uid, e.event_id, cnt, sg / cnt, mn, mx,
-                cv2))
-            }
-          }
-          state.update((lastMs, cnt, sg, mn, mx, sq.toByteArray))
-          out.iterator
-      }
+    import java.math.BigInteger
+    val ppm = BigInteger.valueOf(1000000L)
+    fold(evs(events), byUser, Some(byId))((Long.MinValue, 0L, 0L,
+        Long.MaxValue, Long.MinValue, BigInteger.ZERO.toByteArray)) {
+      case (uid, st @ (lastMs, cnt, sg, mn, mx, sqB), e) =>
+        val ms = e.ts.getTime
+        val g = if (lastMs == Long.MinValue) 0L else ms - lastMs
+        val next @ (_, n, s, lo, hi, nextB) =
+          if (g <= 0) st.copy(_1 = ms)
+          else (ms, cnt + 1, sg + g, math.min(mn, g), math.max(mx, g),
+            new BigInteger(sqB).add(BigInteger.valueOf(g)
+              .multiply(BigInteger.valueOf(g))).toByteArray)
+        val cv2 =
+          if (n < 2) None
+          else Some(BigInteger.valueOf(n).multiply(new BigInteger(nextB))
+            .multiply(ppm)
+            .divide(BigInteger.valueOf(s).multiply(BigInteger.valueOf(s)))
+            .subtract(ppm).longValueExact())
+        (next, if (n == 0) None
+          else Some(CadenceRow(uid, e.event_id, n, s / n, lo, hi, cv2)))
+    }
   }
 
   /** Streaming (running) Kendall τ_a: the unbounded twin of
@@ -410,30 +405,20 @@ object ReactiveStreams {
   def kendallStream(spark: SparkSession, events: DataFrame,
                     n: Int = 32): Dataset[KendallRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[(Long, Double)], KendallRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[List[(Long, Double)]]) =>
-          var pts = state.getOption.getOrElse(Nil) // newest first
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            pts = ((e.event_id, e.value) :: pts).take(n)
-            val asc = pts.reverse.toArray // event_id ascending
-            var conc = 0L
-            var disc = 0L
-            for (j <- 1 until asc.length; i <- 0 until j) {
-              if (asc(i)._2 < asc(j)._2) conc += 1
-              else if (asc(i)._2 > asc(j)._2) disc += 1
-            }
-            val np = asc.length.toLong * (asc.length - 1) / 2
-            KendallRow(uid, e.event_id, asc.length.toLong, np, conc,
-              disc, if (np > 0) (conc - disc) * 1000000L / np else 0L)
-          }
-          state.update(pts)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(List.empty[(Long, Double)]) {
+      (uid, last, e) =>
+        val pts = ((e.event_id, e.value) :: last).take(n) // newest first
+        val asc = pts.reverse.toArray // event_id ascending
+        var conc = 0L
+        var disc = 0L
+        for (j <- 1 until asc.length; i <- 0 until j) {
+          if (asc(i)._2 < asc(j)._2) conc += 1
+          else if (asc(i)._2 > asc(j)._2) disc += 1
+        }
+        val np = asc.length.toLong * (asc.length - 1) / 2
+        (pts, Some(KendallRow(uid, e.event_id, asc.length.toLong, np, conc,
+          disc, if (np > 0) (conc - disc) * 1000000L / np else 0L)))
+    }
   }
 
   /** Streaming (running) longest increasing subsequence: the
@@ -450,25 +435,14 @@ object ReactiveStreams {
   def lisStream(spark: SparkSession, events: DataFrame)
       : Dataset[LisRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Vector[Double]), LisRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Vector[Double])]) =>
-          var (cnt, tails) =
-            state.getOption.getOrElse((0L, Vector.empty[Double]))
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            val i = tails.count(_ < e.value) // batch insertion point
-            tails = if (i == tails.length) tails :+ e.value
-                    else tails.updated(i, e.value)
-            cnt += 1
-            LisRow(uid, e.event_id, cnt, tails.length.toLong)
-          }
-          state.update((cnt, tails))
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))((0L, Vector.empty[Double])) {
+      case (uid, (cnt, tails), e) =>
+        val i = tails.count(_ < e.value) // batch insertion point
+        val next = if (i == tails.length) tails :+ e.value
+                   else tails.updated(i, e.value)
+        ((cnt + 1, next),
+          Some(LisRow(uid, e.event_id, cnt + 1, next.length.toLong)))
+    }
   }
 
   /** Streaming withLatestFrom / as-of enrichment: each primary-type
@@ -529,24 +503,17 @@ object ReactiveStreams {
   def runningTopK(spark: SparkSession, events: DataFrame, k: Int = 3)
       : Dataset[TopKRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Seq[(Double, Long)], TopKRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[Seq[(Double, Long)]]) =>
-          // keep the k largest (value, event_id) pairs; event_id is
-          // the deterministic tiebreak (total order)
-          val merged = (state.getOption.getOrElse(Seq.empty) ++
-            rows.map(e => (e.value, e.event_id)))
-            .sortBy { case (v, id) => (-v, id) }
-            .take(k)
-          state.update(merged)
-          merged.zipWithIndex.map { case ((v, id), i) =>
-            TopKRow(uid, i + 1, id, v)
-          }.iterator
-      }
+    keyed(evs(events), byUser, mode = OutputMode.Update)(
+        Seq.empty[(Double, Long)]) { (uid, top, rows, _) =>
+      // keep the k largest (value, event_id) pairs; event_id is
+      // the deterministic tiebreak (total order)
+      val merged = (top ++ rows.map(e => (e.value, e.event_id)))
+        .sortBy { case (v, id) => (-v, id) }
+        .take(k)
+      (merged, merged.zipWithIndex.map { case ((v, id), i) =>
+        TopKRow(uid, i + 1, id, v)
+      })
+    }
   }
 
   /** Streaming exact dedup: drop re-deliveries of the same event_id,
@@ -572,29 +539,13 @@ object ReactiveStreams {
   def islandsStream(spark: SparkSession, events: DataFrame)
       : Dataset[IslandRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(String, Long, Long, Long, Long), IslandRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(String, Long, Long, Long, Long)]) =>
-          var cur = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer[IslandRow]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            cur match {
-              case Some((t, id, n, f, _)) if t == e.event_type =>
-                cur = Some((t, id, n + 1, f, e.event_id))
-              case Some((t, id, n, f, l)) =>
-                out += IslandRow(uid, id, t, n, f, l)
-                cur = Some((e.event_type, id + 1, 1L, e.event_id, e.event_id))
-              case None =>
-                cur = Some((e.event_type, 1L, 1L, e.event_id, e.event_id))
-            }
-          }
-          cur.foreach(state.update)
-          out.iterator
-      }
+    // a new key starts from island 0 with no events (n = 0)
+    fold(evs(events), byUser, Some(byId))(("", 0L, 0L, 0L, 0L)) {
+      case (uid, (t, id, n, f, l), e) =>
+        if (n > 0 && t == e.event_type) ((t, id, n + 1, f, e.event_id), None)
+        else ((e.event_type, id + 1, 1L, e.event_id, e.event_id),
+          if (n > 0) Some(IslandRow(uid, id, t, n, f, l)) else None)
+    }
   }
 
   /** Streaming distinct-count estimate per key via the mergeable KMV
@@ -609,26 +560,21 @@ object ReactiveStreams {
   def kmvDistinctStream(spark: SparkSession, events: DataFrame,
                         k: Int = 16): Dataset[DistinctEstRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Array[Long], DistinctEstRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[Array[Long]]) =>
-          val st = new graft.functions.KmvState(k)
-          state.getOption.foreach(_.foreach(st.insert))
-          rows.foreach(e => st.insert(
-            graft.functions.Kernels.md5Prefix60(e.value.toString)))
-          val arr = new Array[Long](st.set.size)
-          val it = st.set.iterator(); var i = 0
-          while (it.hasNext) { arr(i) = it.next(); i += 1 }
-          state.update(arr)
-          val est =
-            if (st.set.size < k) st.set.size.toLong
-            else (BigInt(k - 1) * (BigInt(1) << 60) /
-              BigInt(st.set.last())).toLong
-          Iterator.single(DistinctEstRow(uid, est))
-      }
+    keyed(evs(events), byUser, mode = OutputMode.Update)(
+        Array.empty[Long]) { (uid, kept, rows, _) =>
+      val st = new graft.functions.KmvState(k)
+      kept.foreach(st.insert)
+      rows.foreach(e => st.insert(
+        graft.functions.Kernels.md5Prefix60(e.value.toString)))
+      val arr = new Array[Long](st.set.size)
+      val it = st.set.iterator(); var i = 0
+      while (it.hasNext) { arr(i) = it.next(); i += 1 }
+      val est =
+        if (st.set.size < k) st.set.size.toLong
+        else (BigInt(k - 1) * (BigInt(1) << 60) /
+          BigInt(st.set.last())).toLong
+      (arr, Some(DistinctEstRow(uid, est)))
+    }
   }
 
   /** Streaming twin of [[graft.operators.Sketches.quantileSketch]]:
@@ -646,24 +592,18 @@ object ReactiveStreams {
   def quantileSketchStream(spark: SparkSession, docs: DataFrame,
                            k: Int = 256): Dataset[QuantRow] = {
     import spark.implicits._
-    docs.selectExpr("doc_id", "source", "n_chars").as[DocIn]
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[List[(String, Long, Long)], QuantRow](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[DocIn],
-         state: GroupState[List[(String, Long, Long)]]) =>
-          val incoming = rows.map(d =>
-            (md5HexAscii(d.doc_id.toString), d.doc_id, d.n_chars)).toList
-          val kept = (state.getOption.getOrElse(Nil) ++ incoming)
-            .sortBy(t => (t._1, t._2)).take(k)
-          state.update(kept)
-          val vals = kept.map(_._3).sorted.toArray
-          val m = vals.length
-          def est(q: Double): Long =
-            vals(math.max(1L, math.ceil(m * q).toLong).toInt - 1)
-          Iterator.single(QuantRow(src, m.toLong,
-            est(0.5), est(0.9), est(0.99)))
-      }
+    keyed(docs.selectExpr("doc_id", "source", "n_chars").as[DocIn],
+        (d: DocIn) => d.source, mode = OutputMode.Update)(
+        List.empty[(String, Long, Long)]) { (src, sample, rows, _) =>
+      val kept = (sample ++ rows.map(d =>
+          (md5HexAscii(d.doc_id.toString), d.doc_id, d.n_chars)))
+        .sortBy(t => (t._1, t._2)).take(k)
+      val vals = kept.map(_._3).sorted.toArray
+      val m = vals.length
+      def est(q: Double): Long =
+        vals(math.max(1L, math.ceil(m * q).toLong).toInt - 1)
+      (kept, Some(QuantRow(src, m.toLong, est(0.5), est(0.9), est(0.99))))
+    }
   }
 
   private def md5HexAscii(s: String): String = {
@@ -1096,31 +1036,20 @@ object ReactiveStreams {
   def funnelStream(spark: SparkSession, events: DataFrame)
       : Dataset[FunnelAdvance] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelAdvance](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          val out = Seq.newBuilder[FunnelAdvance]
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            if (s.t1 < 0 && e.event_type == "view") {
-              s = s.copy(t1 = e.event_id)
-              out += FunnelAdvance(uid, 1, e.event_id)
-            } else if (s.t1 >= 0 && s.t2 < 0 &&
-              e.event_type == "click" && e.event_id > s.t1) {
-              s = s.copy(t2 = e.event_id)
-              out += FunnelAdvance(uid, 2, e.event_id)
-            } else if (s.t2 >= 0 && s.t3 < 0 &&
-              e.event_type == "purchase" && e.event_id > s.t2) {
-              s = s.copy(t3 = e.event_id)
-              out += FunnelAdvance(uid, 3, e.event_id)
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    fold(evs(events), byUser, Some(byId))(FunnelState(-1L, -1L, -1L)) {
+      (uid, s, e) =>
+        def advance(stage: Int, next: FunnelState) =
+          (next, Some(FunnelAdvance(uid, stage, e.event_id)))
+        if (s.t1 < 0 && e.event_type == "view")
+          advance(1, s.copy(t1 = e.event_id))
+        else if (s.t1 >= 0 && s.t2 < 0 &&
+          e.event_type == "click" && e.event_id > s.t1)
+          advance(2, s.copy(t2 = e.event_id))
+        else if (s.t2 >= 0 && s.t3 < 0 &&
+          e.event_type == "purchase" && e.event_id > s.t2)
+          advance(3, s.copy(t3 = e.event_id))
+        else (s, None)
+    }
   }
 
   /** Chained stateful aggregation (multiple stateful operators in one
@@ -1216,29 +1145,18 @@ object ReactiveStreams {
                       maxRetries: Int = 2, retryableBelow: Double = 300.0)
       : Dataset[RetryRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Boolean), RetryRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[(Long, Boolean)]) =>
-          var (retried, dead) = state.getOption.getOrElse((0L, false))
-          val out = scala.collection.mutable.ArrayBuffer[RetryRow]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            if (!dead) {
-              if (e.event_type == "error") {
-                val retryable = e.value < retryableBelow
-                if (retryable) retried += 1
-                if (!retryable || retried > maxRetries) dead = true
-                out += RetryRow(e.event_id, uid, e.event_type, e.value,
-                  retried, dead)
-              } else out += RetryRow(e.event_id, uid, e.event_type, e.value,
-                retried, terminal = false)
-            }
-          }
-          state.update((retried, dead))
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))((0L, false)) {
+      case (uid, st @ (retried, dead), e) =>
+        if (dead) (st, None)
+        else if (e.event_type == "error") {
+          val retryable = e.value < retryableBelow
+          val n = if (retryable) retried + 1 else retried
+          val end = !retryable || n > maxRetries
+          ((n, end),
+            Some(RetryRow(e.event_id, uid, e.event_type, e.value, n, end)))
+        } else (st, Some(RetryRow(e.event_id, uid, e.event_type, e.value,
+          retried, terminal = false)))
+    }
   }
 
   /** Streaming window(count, skip): overlapping / gapped count
@@ -1259,29 +1177,14 @@ object ReactiveStreams {
       : Dataset[WindowedEl] = {
     require(n > 0 && skip > 0, "count and skip must be positive")
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[WinCsState, WindowedEl](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[WinCsState]) =>
-          var pos = state.getOption.map(_.pos).getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer[WindowedEl]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            // window w covers positions [w*skip, w*skip + n)
-            val wFirst = math.max(0L,
-              math.ceil((pos - n + 1).toDouble / skip).toLong)
-            val wLast = pos / skip
-            var w = wFirst
-            while (w <= wLast) {
-              out += WindowedEl(uid, w, pos - w * skip, e.event_id, e.value)
-              w += 1
-            }
-            pos += 1
-          }
-          state.update(WinCsState(pos))
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(WinCsState(0L)) {
+      case (uid, WinCsState(pos), e) =>
+        // window w covers positions [w*skip, w*skip + n)
+        val wFirst = math.max(0L,
+          math.ceil((pos - n + 1).toDouble / skip).toLong)
+        (WinCsState(pos + 1), (wFirst to pos / skip).map(w =>
+          WindowedEl(uid, w, pos - w * skip, e.event_id, e.value)))
+    }
   }
 
   /** Streaming timeout detect: the unbounded twin of
@@ -1298,31 +1201,18 @@ object ReactiveStreams {
   def timeoutDetect(spark: SparkSession, events: DataFrame,
                     gapMs: Long = 3600000L): Dataset[TimeoutMark] = {
     import spark.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), TimeoutMark](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map { case (eid, t) =>
-              TimeoutMark(uid, eid, t, t + gapMs)
-            }
-            state.remove()
-            out.iterator
-          } else {
-            // track the newest event; watch its silence window
-            val newest = rows.maxBy(_.event_id)
-            val cur = state.getOption
-            if (cur.forall(_._2 <= newest.ts.getTime)) {
-              state.update((newest.event_id, newest.ts.getTime))
-              state.setTimeoutTimestamp(newest.ts.getTime + gapMs)
-            }
-            Iterator.empty
-          }
-      }
+    // state: the watched (event_id, ts ms); a new key watches nothing
+    keyed(evs(events.withWatermark("ts", "10 minutes")), byUser)(
+        (Long.MinValue, Long.MinValue),
+        Some(Evict((s: (Long, Long)) => s._2 + gapMs,
+          (uid: Long, s: (Long, Long)) =>
+            Some(TimeoutMark(uid, s._1, s._2, s._2 + gapMs))))) {
+      (_, watched, rows, _) =>
+        // track the newest event; watch its silence window
+        val newest = rows.maxBy(_.event_id)
+        (if (watched._2 <= newest.ts.getTime)
+          (newest.event_id, newest.ts.getTime) else watched, Nil)
+    }
   }
 
   /** Streaming combineLatest: the unbounded twin of
@@ -1341,37 +1231,23 @@ object ReactiveStreams {
                           typeB: String = "click",
                           idleTtlMs: Option[Long] = None): Dataset[Combined] = {
     import spark.implicits._
-    val timeoutConf = if (idleTtlMs.isDefined)
-      GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .filter(e => e.event_type == typeA || e.event_type == typeB)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[
-        (Option[(Long, Double)], Option[(Long, Double)], Long),
-        Combined](OutputMode.Append, timeoutConf) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[
-           (Option[(Long, Double)], Option[(Long, Double)], Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var (a, b, _) = state.getOption.getOrElse((None, None, 0L))
-            var lastTs = 0L
-            val out = scala.collection.mutable.ArrayBuffer[Combined]()
-            rows.toSeq.sortBy(_.event_id).foreach { e =>
-              if (e.event_type == typeA) a = Some((e.event_id, e.value))
-              else b = Some((e.event_id, e.value))
-              lastTs = math.max(lastTs, e.ts.getTime)
-              for ((ae, av) <- a; (be, bv) <- b)
-                out += Combined(uid, e.event_id, ae, av, be, bv)
-            }
-            state.update((a, b, lastTs))
-            idleTtlMs.foreach(ttl => state.setTimeoutTimestamp(lastTs + ttl))
-            out.iterator
-          }
-      }
+    type Latest = Option[(Long, Double)]
+    // state: latest A, latest B, newest ts of the key's last trigger
+    keyed(evs(events).filter(e =>
+        e.event_type == typeA || e.event_type == typeB), byUser, Some(byId))(
+        (Option.empty[(Long, Double)], Option.empty[(Long, Double)], 0L),
+        idleTtlMs.map(ttl =>
+          Evict((s: (Latest, Latest, Long)) => s._3 + ttl))) {
+      (uid, st, rows, _) =>
+        var (a, b, _) = st
+        val out = rows.flatMap { e =>
+          if (e.event_type == typeA) a = Some((e.event_id, e.value))
+          else b = Some((e.event_id, e.value))
+          for ((ae, av) <- a; (be, bv) <- b)
+            yield Combined(uid, e.event_id, ae, av, be, bv)
+        }
+        ((a, b, rows.foldLeft(0L)((m, e) => math.max(m, e.ts.getTime))), out)
+    }
   }
 
   /** Streaming buffer(count): per-key count-based batches emitted as
@@ -1387,25 +1263,14 @@ object ReactiveStreams {
   def bufferCount(spark: SparkSession, events: DataFrame, n: Int = 5)
       : Dataset[Buffered] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BufState, Buffered](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[BufState]) =>
-          var st = state.getOption.getOrElse(BufState(0L, Seq.empty))
-          val out = scala.collection.mutable.ArrayBuffer[Buffered]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            val open = st.open :+ (e.event_id, e.value)
-            if (open.size == n) {
-              out += Buffered(uid, st.nextBatch, n, open.map(_._2).sum,
-                open.head._1, open.last._1)
-              st = BufState(st.nextBatch + 1, Seq.empty)
-            } else st = BufState(st.nextBatch, open)
-          }
-          state.update(st)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(BufState(0L, Seq.empty)) {
+      (uid, st, e) =>
+        val open = st.open :+ ((e.event_id, e.value))
+        if (open.size != n) (st.copy(open = open), None)
+        else (BufState(st.nextBatch + 1, Seq.empty),
+          Some(Buffered(uid, st.nextBatch, n, open.map(_._2).sum,
+            open.head._1, open.last._1)))
+    }
   }
 
   /** Streaming sequence packing: the unbounded twin of
@@ -1421,27 +1286,19 @@ object ReactiveStreams {
   def packStream(spark: SparkSession, docs: DataFrame,
                  capacity: Long = 4096L): Dataset[PackedBin] = {
     import spark.implicits._
-    docs.selectExpr("doc_id", "source", "n_chars")
-      .as[(Long, String, Long)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[PackState, PackedBin](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(Long, String, Long)],
-         state: GroupState[PackState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer[PackedBin]()
-          rows.toSeq.sortBy(_._1).foreach { case (id, _, n) =>
-            if (st == null) st = PackState(0L, n, 1, id, id)
-            else if (st.used + n > capacity) {
-              out += PackedBin(src, st.binId, st.nDocs, st.used,
-                st.firstDoc, st.lastDoc)
-              st = PackState(st.binId + 1, n, 1, id, id)
-            } else st = PackState(st.binId, st.used + n, st.nDocs + 1,
-              st.firstDoc, id)
-          }
-          state.update(st)
-          out.iterator
-      }
+    // a new source starts with an empty bin 0 (nDocs = 0)
+    fold(docs.selectExpr("doc_id", "source", "n_chars")
+        .as[(Long, String, Long)],
+        (d: (Long, String, Long)) => d._2,
+        Some(Ordering.by((d: (Long, String, Long)) => d._1)))(
+        PackState(0L, 0L, 0, 0L, 0L)) { case (src, st, (id, _, n)) =>
+      if (st.nDocs == 0) (PackState(st.binId, n, 1, id, id), None)
+      else if (st.used + n > capacity)
+        (PackState(st.binId + 1, n, 1, id, id), Some(PackedBin(src,
+          st.binId, st.nDocs, st.used, st.firstDoc, st.lastDoc)))
+      else (PackState(st.binId, st.used + n, st.nDocs + 1, st.firstDoc, id),
+        None)
+    }
   }
 
   /** Streaming resample + forward-fill: the unbounded twin of
@@ -1472,53 +1329,45 @@ object ReactiveStreams {
                      watermark: String = "1 hour"): Dataset[GridTick] = {
     import spark.implicits._
     val dayMs = 86400000L
-    events.withWatermark("ts", watermark)
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ResampleSt, GridTick](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[ResampleSt]) =>
-          var st = state.getOption
-            .getOrElse(ResampleSt(false, 0L, 0.0, false, Long.MinValue,
-              Seq.empty))
-          val fresh = rows.map(e => (e.ts.getTime, e.value, e.event_id))
-            .toSeq
-          if (fresh.nonEmpty) {
-            val buf = (st.buf ++ fresh).sortBy(t => (t._1, t._3))
-            val mx = math.max(st.maxSeen, buf.map(_._1).max)
-            st =
-              if (!st.anchored) {
-                val t0 = buf.head._1 - buf.head._1 % dayMs
-                st.copy(anchored = true, nextGrid = t0, maxSeen = mx,
-                  buf = buf)
-              } else st.copy(maxSeen = mx, buf = buf)
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = scala.collection.mutable.ArrayBuffer[GridTick]()
-          if (st.anchored) {
-            val gridEnd = st.maxSeen - st.maxSeen % dayMs
-            var buf = st.buf
-            var (lastV, hasLast) = (st.lastV, st.hasLast)
-            var g = st.nextGrid
-            // a tick is final once the watermark passes it: every
-            // event with ts <= tick has arrived (watermark contract)
-            while (g <= wm && g <= gridEnd) {
-              while (buf.nonEmpty && buf.head._1 <= g) {
-                lastV = buf.head._2; hasLast = true; buf = buf.tail
-              }
-              out += GridTick(uid, g, if (hasLast) Some(lastV) else None)
-              g += stepMs
+    def gridEnd(st: ResampleSt) = st.maxSeen - st.maxSeen % dayMs
+    // wake when the watermark passes the next pending tick; a fresh
+    // event past gridEnd extends the grid and re-arms
+    keyed(evs(events.withWatermark("ts", watermark)), byUser)(
+        ResampleSt(false, 0L, 0.0, false, Long.MinValue, Seq.empty),
+        wake = Some((st: ResampleSt) =>
+          Some(st.nextGrid).filter(g => st.anchored && g <= gridEnd(st)))) {
+      (uid, st0, rows, wm) =>
+        var st = st0
+        if (rows.nonEmpty) {
+          val buf = (st.buf ++ rows.map(e => (e.ts.getTime, e.value,
+            e.event_id))).sortBy(t => (t._1, t._3))
+          val mx = math.max(st.maxSeen, buf.map(_._1).max)
+          st =
+            if (!st.anchored) {
+              val t0 = buf.head._1 - buf.head._1 % dayMs
+              st.copy(anchored = true, nextGrid = t0, maxSeen = mx,
+                buf = buf)
+            } else st.copy(maxSeen = mx, buf = buf)
+        }
+        val out = scala.collection.mutable.ArrayBuffer[GridTick]()
+        if (st.anchored) {
+          var buf = st.buf
+          var (lastV, hasLast) = (st.lastV, st.hasLast)
+          var g = st.nextGrid
+          // a tick is final once the watermark passes it: every
+          // event with ts <= tick has arrived (watermark contract)
+          while (g <= wm && g <= gridEnd(st)) {
+            while (buf.nonEmpty && buf.head._1 <= g) {
+              lastV = buf.head._2; hasLast = true; buf = buf.tail
             }
-            st = st.copy(nextGrid = g, lastV = lastV, hasLast = hasLast,
-              buf = buf)
-            state.update(st)
-            // wake when the watermark passes the next pending tick;
-            // a fresh event past gridEnd extends the grid and re-arms
-            if (g <= gridEnd) state.setTimeoutTimestamp(g)
-          } else state.update(st)
-          out.iterator
-      }
+            out += GridTick(uid, g, if (hasLast) Some(lastV) else None)
+            g += stepMs
+          }
+          st = st.copy(nextGrid = g, lastV = lastV, hasLast = hasLast,
+            buf = buf)
+        }
+        (st, out)
+    }
   }
 
   /** Streaming resample + LINEAR INTERPOLATION: the unbounded twin
@@ -1546,58 +1395,50 @@ object ReactiveStreams {
       : Dataset[InterpTick] = {
     import spark.implicits._
     val dayMs = 86400000L
-    events.withWatermark("ts", watermark)
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[InterpSt, InterpTick](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[InterpSt]) =>
-          var st = state.getOption
-            .getOrElse(InterpSt(false, 0L, 0L, 0.0, false, Seq.empty))
-          val fresh = rows.map(e => (e.ts.getTime, e.value, e.event_id))
-            .toSeq
-          if (fresh.nonEmpty) {
-            val buf = (st.buf ++ fresh).sortBy(t => (t._1, t._3))
-            st =
-              if (!st.anchored)
-                st.copy(anchored = true,
-                  nextGrid = buf.head._1 - buf.head._1 % dayMs, buf = buf)
-              else st.copy(buf = buf)
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val out = scala.collection.mutable.ArrayBuffer[InterpTick]()
-          if (st.anchored) {
-            var buf = st.buf
-            var (prvT, prvV, hasPrv) = (st.prvT, st.prvV, st.hasPrv)
-            var g = st.nextGrid
-            var blocked = false
-            while (!blocked && g <= wm) {
-              while (buf.nonEmpty && buf.head._1 <= g) {
-                prvT = buf.head._1; prvV = buf.head._2; hasPrv = true
-                buf = buf.tail
-              }
-              if (buf.isEmpty || buf.head._1 > wm) blocked = true
-              else {
-                val (nxtT, nxtV, _) = buf.head
-                val v =
-                  if (!hasPrv) nxtV
-                  else if (nxtT == prvT) prvV
-                  else prvV + (nxtV - prvV) *
-                    ((g - prvT).toDouble / (nxtT - prvT).toDouble)
-                out += InterpTick(uid, g, v)
-                g += stepMs
-              }
+    // re-arm for when the watermark reaches both endpoints
+    keyed(evs(events.withWatermark("ts", watermark)), byUser)(
+        InterpSt(false, 0L, 0L, 0.0, false, Seq.empty),
+        wake = Some((st: InterpSt) =>
+          st.buf.headOption.map(h => math.max(st.nextGrid, h._1)))) {
+      (uid, st0, rows, wm) =>
+        var st = st0
+        if (rows.nonEmpty) {
+          val buf = (st.buf ++ rows.map(e => (e.ts.getTime, e.value,
+            e.event_id))).sortBy(t => (t._1, t._3))
+          st =
+            if (!st.anchored)
+              st.copy(anchored = true,
+                nextGrid = buf.head._1 - buf.head._1 % dayMs, buf = buf)
+            else st.copy(buf = buf)
+        }
+        val out = scala.collection.mutable.ArrayBuffer[InterpTick]()
+        if (st.anchored) {
+          var buf = st.buf
+          var (prvT, prvV, hasPrv) = (st.prvT, st.prvV, st.hasPrv)
+          var g = st.nextGrid
+          var blocked = false
+          while (!blocked && g <= wm) {
+            while (buf.nonEmpty && buf.head._1 <= g) {
+              prvT = buf.head._1; prvV = buf.head._2; hasPrv = true
+              buf = buf.tail
             }
-            st = st.copy(nextGrid = g, prvT = prvT, prvV = prvV,
-              hasPrv = hasPrv, buf = buf)
-            state.update(st)
-            // re-arm for when the watermark reaches both endpoints
-            if (buf.nonEmpty)
-              state.setTimeoutTimestamp(math.max(g, buf.head._1))
-          } else state.update(st)
-          out.iterator
-      }
+            if (buf.isEmpty || buf.head._1 > wm) blocked = true
+            else {
+              val (nxtT, nxtV, _) = buf.head
+              val v =
+                if (!hasPrv) nxtV
+                else if (nxtT == prvT) prvV
+                else prvV + (nxtV - prvV) *
+                  ((g - prvT).toDouble / (nxtT - prvT).toDouble)
+              out += InterpTick(uid, g, v)
+              g += stepMs
+            }
+          }
+          st = st.copy(nextGrid = g, prvT = prvT, prvV = prvV,
+            hasPrv = hasPrv, buf = buf)
+        }
+        (st, out)
+    }
   }
 
   /** Streaming token-bucket rate limiter — unbounded twin of
@@ -1616,35 +1457,17 @@ object ReactiveStreams {
     import spark.implicits._
     val capMicro = capacityTokens * 1000000L
     val refillHorizonMs = capMicro / refillMicroPerMs + 1
-    events.withWatermark("ts", "10 minutes")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), AdmitRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var (tokens, last) =
-              state.getOption.getOrElse((capMicro, Long.MinValue))
-            val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-              .map { e =>
-                val t = e.ts.getTime
-                if (last != Long.MinValue)
-                  tokens = math.min(capMicro,
-                    tokens + (t - last) * refillMicroPerMs)
-                last = t
-                val admitted = tokens >= 1000000L
-                if (admitted) tokens -= 1000000L
-                AdmitRow(uid, e.event_id, t, admitted, tokens)
-              }
-            state.update((tokens, last))
-            state.setTimeoutTimestamp(math.max(last + refillHorizonMs,
-              state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
+    fold(evs(events.withWatermark("ts", "10 minutes")), byUser,
+        Some(byTime))((capMicro, Long.MinValue),
+        Some(Evict((s: (Long, Long)) => s._2 + refillHorizonMs))) {
+      case (uid, (held, last), e) =>
+        val t = e.ts.getTime
+        val tokens = if (last == Long.MinValue) held
+          else math.min(capMicro, held + (t - last) * refillMicroPerMs)
+        val admitted = tokens >= 1000000L
+        val left = if (admitted) tokens - 1000000L else tokens
+        ((left, t), Some(AdmitRow(uid, e.event_id, t, admitted, left)))
+    }
   }
 
   /** Streaming capped sessionization — unbounded twin of
@@ -1666,34 +1489,18 @@ object ReactiveStreams {
                           gapMs: Long = 1800000L,
                           capMs: Long = 7200000L): Dataset[SessionRow] = {
     import spark.implicits._
-    events.withWatermark("ts", "10 minutes")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), SessionRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var (ss, prevT) = state.getOption.getOrElse((-1L, -1L))
-            val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-              .map { e =>
-                val t = e.ts.getTime
-                if (ss < 0 || t - prevT > gapMs || t - ss > capMs) ss = t
-                prevT = t
-                SessionRow(uid, e.event_id, t, ss)
-              }
-            state.update((ss, prevT))
-            // state is only needed while a non-gap continuation is
-            // still possible: evict once the watermark passes it
-            // (clamped: an event-time timeout must sit above the
-            // current watermark)
-            state.setTimeoutTimestamp(
-              math.max(prevT + gapMs, state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
+    // state is only needed while a non-gap continuation is still
+    // possible: evict once the watermark passes it
+    fold(evs(events.withWatermark("ts", "10 minutes")), byUser,
+        Some(byTime))((-1L, -1L),
+        Some(Evict((s: (Long, Long)) => s._2 + gapMs))) {
+      case (uid, (start, prevT), e) =>
+        val t = e.ts.getTime
+        val ss =
+          if (start < 0 || t - prevT > gapMs || t - start > capMs) t
+          else start
+        ((ss, t), Some(SessionRow(uid, e.event_id, t, ss)))
+    }
   }
 
   case class MinuteDelta(minute: Long, d: Long)
@@ -1735,41 +1542,17 @@ object ReactiveStreams {
   def concurrencyStream(spark: SparkSession, events: DataFrame,
                         gapMs: Long = 1800000L): DataFrame = {
     import spark.implicits._
-    val deltas = events.withWatermark("ts", "10 minutes")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), MinuteDelta](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Long)]) =>
-          def close(ss: Long, end: Long): Seq[MinuteDelta] =
-            Seq(MinuteDelta(ss / 60000L, 1L),
-              MinuteDelta(end / 60000L + 1L, -1L))
-          if (state.hasTimedOut) {
-            val (ss, prev) = state.get
-            state.remove()
-            close(ss, prev).iterator
-          } else {
-            var (ss, prev) = state.getOption.getOrElse((-1L, -1L))
-            val out =
-              scala.collection.mutable.ArrayBuffer.empty[MinuteDelta]
-            rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-              .foreach { e =>
-                val t = e.ts.getTime
-                if (ss < 0) ss = t
-                else if (t - prev > gapMs) {
-                  out ++= close(ss, prev)
-                  ss = t
-                }
-                prev = t
-              }
-            state.update((ss, prev))
-            state.setTimeoutTimestamp(math.max(prev + gapMs,
-              state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
+    def close(s: (Long, Long)): Seq[MinuteDelta] =
+      Seq(MinuteDelta(s._1 / 60000L, 1L), MinuteDelta(s._2 / 60000L + 1L, -1L))
+    val deltas = fold(evs(events.withWatermark("ts", "10 minutes")), byUser,
+        Some(byTime))((-1L, -1L), Some(Evict((s: (Long, Long)) =>
+          s._2 + gapMs, (_: Long, s: (Long, Long)) => close(s)))) {
+      (_, s, e) =>
+        val t = e.ts.getTime
+        if (s._1 < 0) ((t, t), Nil)
+        else if (t - s._2 > gapMs) ((t, t), close(s))
+        else ((s._1, t), Nil)
+    }
     deltas.groupBy(col("minute")).agg(sum(col("d")).as("delta"))
   }
 
@@ -1786,23 +1569,9 @@ object ReactiveStreams {
   def transitionsStream(spark: SparkSession, events: DataFrame)
       : DataFrame = {
     import spark.implicits._
-    val pairs = events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[String, TransRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[String]) =>
-          val sorted = rows.toSeq.sortBy(_.event_id)
-          val out = scala.collection.mutable.ArrayBuffer[TransRow]()
-          var last = state.getOption
-          sorted.foreach { e =>
-            last.foreach(f => out += TransRow(uid, f, e.event_type))
-            last = Some(e.event_type)
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
+    val pairs = consecutive(evs(events))(_.event_type) { (uid, last, e) =>
+      last.map(TransRow(uid, _, e.event_type))
+    }
     pairs.groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n_trans"))
   }
@@ -1819,27 +1588,12 @@ object ReactiveStreams {
     * the batch op. */
   def twapStream(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    val segs = events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Double), TwapSeg](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Double)]) =>
-          val sorted = rows.toSeq.sortBy(_.event_id)
-          val out = scala.collection.mutable.ArrayBuffer[TwapSeg]()
-          var last = state.getOption
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            last.foreach { case (lt, lv) =>
-              if (t > lt) out += TwapSeg(uid, t - lt, lv * (t - lt))
-            }
-            last = Some((t, e.value))
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
+    val segs = consecutive(evs(events))(e => (e.ts.getTime, e.value)) {
+      (uid, last, e) =>
+        val t = e.ts.getTime
+        last.collect { case (lt, lv) if t > lt =>
+          TwapSeg(uid, t - lt, lv * (t - lt)) }
+    }
     segs.groupBy("user_id")
       .agg(count(lit(1)).as("n_segments"),
         sum("dt_ms").as("span_ms"),
@@ -1896,27 +1650,10 @@ object ReactiveStreams {
     * an already-closed dwell segment. */
   def dwellStream(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    val segs = events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, String), DwellSeg](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, String)]) =>
-          val sorted = rows.toSeq.sortBy(_.event_id)
-          val out = scala.collection.mutable.ArrayBuffer[DwellSeg]()
-          var last = state.getOption
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            last.foreach { case (lt, ltype) =>
-              out += DwellSeg(ltype, t - lt)
-            }
-            last = Some((t, e.event_type))
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
+    val segs = consecutive(evs(events))(e => (e.ts.getTime, e.event_type)) {
+      (_, last, e) =>
+        last.map { case (lt, ltype) => DwellSeg(ltype, e.ts.getTime - lt) }
+    }
     segs.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum("dwell_ms").as("total_dwell_ms"),
@@ -1937,25 +1674,12 @@ object ReactiveStreams {
     * cast's valueOf semantics (same rule as [[cusumStream]]). */
   def attributionStream(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    val rows = events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[String, AttrRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[String]) =>
-          var touch = state.getOption.getOrElse("direct")
-          val out = rows.toSeq.sortBy(_.event_id).flatMap { e =>
-            if (e.event_type == "purchase") {
-              val cents = java.math.BigDecimal.valueOf(e.value)
-                .setScale(2, java.math.RoundingMode.HALF_UP)
-                .movePointRight(2).longValueExact()
-              Some(AttrRow(touch, cents))
-            } else { touch = e.event_type; None }
-          }
-          state.update(touch)
-          out.iterator
-      }
+    val rows = fold(evs(events), byUser, Some(byId))("direct") {
+      (_, touch, e) =>
+        if (e.event_type == "purchase")
+          (touch, Some(AttrRow(touch, cents(e.value))))
+        else (e.event_type, None)
+    }
     rows.groupBy("channel")
       .agg(count(lit(1)).as("n_conversions"),
         sum("cents").as("attributed_cents"))
@@ -1977,40 +1701,32 @@ object ReactiveStreams {
                   windowBuckets: Int = 10, factor: Int = 3)
       : Dataset[BurstRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[(Long, List[(Long, Long)]), BurstRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (etype: String, rows: Iterator[Ev],
-         state: GroupState[(Long, List[(Long, Long)])]) =>
-          var (first, hist) = state.getOption.getOrElse((Long.MaxValue, Nil))
-          val out = scala.collection.mutable.ArrayBuffer[BurstRow]()
-          def close(m: Long, c: Long): Unit =
-            if (m >= first + windowBuckets) {
-              val trail = hist
-                .filter { case (hm, _) => hm >= m - windowBuckets && hm < m }
-                .map(_._2).sum
-              if (c * windowBuckets > trail * factor)
-                out += BurstRow(etype, m, c, trail)
-            }
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            val m = e.ts.getTime / 60000L
-            if (first == Long.MaxValue) first = m
-            hist match {
-              case (lm, lc) :: rest if lm == m => hist = (m, lc + 1) :: rest
-              case (lm, lc) :: _ if m > lm =>
-                close(lm, lc)
-                hist = ((m, 1L) :: hist)
-                  .filter { case (hm, _) => hm >= m - windowBuckets }
-              case Nil => hist = List((m, 1L))
-              case _ => // late minute (shouldn't occur: ids order time)
-                hist = (m, 1L) :: hist
-            }
-          }
-          state.update((first, hist))
-          out.iterator
-      }
+    fold(evs(events), (e: Ev) => e.event_type, Some(byId))(
+        (Long.MaxValue, List.empty[(Long, Long)])) {
+      case (etype, (first0, hist), e) =>
+        val m = e.ts.getTime / 60000L
+        val first = if (first0 == Long.MaxValue) m else first0
+        // a minute's verdict, emitted when a later minute arrives
+        def close(cm: Long, c: Long) = {
+          val trail = hist
+            .filter { case (hm, _) => hm >= cm - windowBuckets && hm < cm }
+            .map(_._2).sum
+          if (cm >= first + windowBuckets && c * windowBuckets > trail * factor)
+            Some(BurstRow(etype, cm, c, trail))
+          else None
+        }
+        hist match {
+          case (lm, lc) :: rest if lm == m =>
+            ((first, (m, lc + 1) :: rest), None)
+          case (lm, lc) :: _ if m > lm =>
+            ((first, ((m, 1L) :: hist)
+              .filter { case (hm, _) => hm >= m - windowBuckets }),
+              close(lm, lc))
+          case Nil => ((first, List((m, 1L))), None)
+          case _ => // late minute (shouldn't occur: ids order time)
+            ((first, (m, 1L) :: hist), None)
+        }
+    }
   }
 
   case class ShapeAlert(user_id: Long, start_event_id: Long, dist: Double)
@@ -2030,29 +1746,21 @@ object ReactiveStreams {
     import spark.implicits._
     val q = pattern.toArray
     val L = q.length
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[(Long, Double)], ShapeAlert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[List[(Long, Double)]]) =>
-          var ring = state.getOption.getOrElse(Nil) // newest first
-          val out = scala.collection.mutable.ArrayBuffer[ShapeAlert]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            ring = ((e.event_id, e.value) :: ring).take(L)
-            if (ring.length == L) {
-              val window = ring.reverse
-              val arr = org.apache.spark.sql.catalyst.util.ArrayData
-                .toArrayData(window.map(_._2).toArray)
-              val d = graft.functions.Kernels.znDist(arr, q)
-              if (d <= maxDist)
-                out += ShapeAlert(uid, window.head._1, d)
-            }
+    fold(evs(events), byUser, Some(byId))(List.empty[(Long, Double)]) {
+      (uid, last, e) =>
+        val ring = ((e.event_id, e.value) :: last).take(L) // newest first
+        val alert =
+          if (ring.length < L) None
+          else {
+            val window = ring.reverse
+            val arr = org.apache.spark.sql.catalyst.util.ArrayData
+              .toArrayData(window.map(_._2).toArray)
+            val d = graft.functions.Kernels.znDist(arr, q)
+            if (d <= maxDist) Some(ShapeAlert(uid, window.head._1, d))
+            else None
           }
-          state.update(ring)
-          out.iterator
-      }
+        (ring, alert)
+    }
   }
 
   case class PathRow(user_id: Long, path: String)
@@ -2069,25 +1777,16 @@ object ReactiveStreams {
   def pathsStream(spark: SparkSession, events: DataFrame, depth: Int = 3)
       : DataFrame = {
     import spark.implicits._
-    val paths = events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[String], PathRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[List[String]]) =>
-          var seen = state.getOption.getOrElse(Nil) // reversed prefix
-          val out = scala.collection.mutable.ArrayBuffer[PathRow]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            if (seen.length < depth) {
-              seen = e.event_type :: seen
-              if (seen.length == depth)
-                out += PathRow(uid, seen.reverse.mkString(">"))
-            }
-          }
-          state.update(seen)
-          out.iterator
-      }
+    // state: the reversed prefix
+    val paths = fold(evs(events), byUser, Some(byId))(List.empty[String]) {
+      (uid, seen, e) =>
+        if (seen.length >= depth) (seen, None)
+        else {
+          val s = e.event_type :: seen
+          (s, if (s.length == depth) Some(PathRow(uid, s.reverse.mkString(">")))
+              else None)
+        }
+    }
     paths.groupBy("path").agg(count(lit(1)).as("n_users"))
   }
 
@@ -2107,26 +1806,10 @@ object ReactiveStreams {
                   refCents: Long, alarmCents: Long = 100000L)
       : Dataset[CusumRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, CusumRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[Long]) =>
-          var s = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            // valueOf = Double.toString semantics — what Spark's
-            // cast(DECIMAL) uses; the raw binary expansion would
-            // round 0.004999… differently
-            val cents = java.math.BigDecimal.valueOf(e.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            s = math.max(0L, s + (cents - refCents))
-            CusumRow(e.event_id, uid, s, s > alarmCents)
-          }
-          state.update(s)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(0L) { (uid, s0, e) =>
+      val s = math.max(0L, s0 + (cents(e.value) - refCents))
+      (s, Some(CusumRow(e.event_id, uid, s, s > alarmCents)))
+    }
   }
 
   case class DrawdownRow(event_id: Long, user_id: Long, cents: Long,
@@ -2151,27 +1834,15 @@ object ReactiveStreams {
   def drawdownStream(spark: SparkSession, events: DataFrame)
       : Dataset[DrawdownRow] = {
     import spark.implicits._
-    events.selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, DrawdownRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[Long]) =>
-          var peak = state.getOption.getOrElse(Long.MinValue)
-          val out = rows.toSeq.sortBy(_.event_id).map { e =>
-            val cents = java.math.BigDecimal.valueOf(e.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            peak = math.max(peak, cents)
-            val dd = peak - cents
-            val ppm = if (peak > 0)
-              Some((BigInt(dd) * 1000000 / BigInt(peak)).toLong)
-            else None
-            DrawdownRow(e.event_id, uid, cents, peak, dd, ppm)
-          }
-          state.update(peak)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(Long.MinValue) { (uid, top, e) =>
+      val c = cents(e.value)
+      val peak = math.max(top, c)
+      val dd = peak - c
+      val ppm = if (peak > 0)
+        Some((BigInt(dd) * 1000000 / BigInt(peak)).toLong)
+      else None
+      (peak, Some(DrawdownRow(e.event_id, uid, c, peak, dd, ppm)))
+    }
   }
 
   /** Streaming funnel-rates report: the unbounded twin of
@@ -2227,25 +1898,11 @@ object ReactiveStreams {
   def interarrivalHistStream(spark: SparkSession, events: DataFrame)
       : DataFrame = {
     import spark.implicits._
-    val gaps = events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, GapRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[Long]) =>
-          var last = state.getOption.getOrElse(Long.MinValue)
-          val out = scala.collection.mutable.ArrayBuffer[GapRow]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            val ms = e.ts.getTime
-            if (last != Long.MinValue && ms > last)
-              out += GapRow(e.event_type,
-                (63 - java.lang.Long.numberOfLeadingZeros(ms - last)).toLong)
-            last = ms
-          }
-          state.update(last)
-          out.iterator
-      }
+    val gaps = consecutive(evs(events))(_.ts.getTime) { (_, last, e) =>
+      val ms = e.ts.getTime
+      last.filter(ms > _).map(l => GapRow(e.event_type,
+        (63 - java.lang.Long.numberOfLeadingZeros(ms - l)).toLong))
+    }
     gaps.groupBy("event_type", "log2_bucket")
       .agg(count(lit(1)).as("n"))
   }
@@ -2267,23 +1924,9 @@ object ReactiveStreams {
   def anomalyPathStream(spark: SparkSession, events: DataFrame)
       : Dataset[PairRow] = {
     import spark.implicits._
-    events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[String, PairRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[String]) =>
-          val out = scala.collection.mutable.ArrayBuffer[PairRow]()
-          var last = state.getOption
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            last.foreach(f =>
-              out += PairRow(uid, f, e.event_type, e.event_id))
-            last = Some(e.event_type)
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
+    consecutive(evs(events))(_.event_type) { (uid, last, e) =>
+      last.map(PairRow(uid, _, e.event_type, e.event_id))
+    }
   }
 
   case class PairRow(user_id: Long, from_state: String, to_state: String,
@@ -2334,27 +1977,13 @@ object ReactiveStreams {
   def abTestStream(spark: SparkSession, events: DataFrame)
       : Dataset[AbRow] = {
     import spark.implicits._
-    events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long, Long), AbRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Long, Long)]) =>
-          var (n, conv, rev) = state.getOption.getOrElse((0L, 0L, 0L))
-          rows.foreach { e =>
-            n += 1
-            if (e.event_type == "purchase") {
-              conv = 1L
-              rev += java.math.BigDecimal.valueOf(e.value)
-                .setScale(2, java.math.RoundingMode.HALF_UP)
-                .movePointRight(2).longValueExact()
-            }
-          }
-          state.update((n, conv, rev))
-          Iterator.single(AbRow(uid, n, conv, rev))
+    keyed(evs(events), byUser)((0L, 0L, 0L)) { (uid, st, rows, _) =>
+      val s @ (n, conv, rev) = rows.foldLeft(st) { case ((n, conv, rev), e) =>
+        if (e.event_type == "purchase") (n + 1, 1L, rev + cents(e.value))
+        else (n + 1, conv, rev)
       }
+      (s, Some(AbRow(uid, n, conv, rev)))
+    }
   }
 
   /** Bounded arm rollup over [[abTestStream]]'s snapshot sink:
@@ -2404,25 +2033,14 @@ object ReactiveStreams {
   def trendingStream(spark: SparkSession, events: DataFrame,
                      salts: Int = 8): Dataset[TrendRow] = {
     import spark.implicits._
-    events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(e =>
-        (e.ts.getTime / 86400000L, math.floorMod(e.user_id, salts.toLong)))
-      .flatMapGroupsWithState[Map[String, Long], TrendRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Long, Long), rows: Iterator[Ev],
-         state: GroupState[Map[String, Long]]) =>
-          var counts = state.getOption.getOrElse(Map.empty[String, Long])
-          val touched = scala.collection.mutable.LinkedHashSet[String]()
-          rows.foreach { e =>
-            counts = counts.updated(e.event_type,
-              counts.getOrElse(e.event_type, 0L) + 1L)
-            touched += e.event_type
-          }
-          state.update(counts)
-          touched.iterator.map(t => TrendRow(key._1, key._2, t, counts(t)))
-      }
+    keyed(evs(events), (e: Ev) =>
+        (e.ts.getTime / 86400000L, math.floorMod(e.user_id, salts.toLong)))(
+        Map.empty[String, Long]) { (key, st, rows, _) =>
+      val counts = rows.foldLeft(st)((c, e) =>
+        c.updated(e.event_type, c.getOrElse(e.event_type, 0L) + 1L))
+      (counts, rows.map(_.event_type).distinct
+        .map(t => TrendRow(key._1, key._2, t, counts(t))))
+    }
   }
 
   /** Bounded top-k over [[trendingStream]]'s count sink: latest
@@ -2458,34 +2076,18 @@ object ReactiveStreams {
   def peaksStream(spark: SparkSession, events: DataFrame)
       : Dataset[PeakRow] = {
     import spark.implicits._
-    events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long, Long, Boolean, Boolean), PeakRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev],
-         state: GroupState[(Long, Long, Long, Boolean, Boolean)]) =>
-          // (prevCents, currId, currCents, havePair, haveCurr):
-          // haveCurr after one point, havePair after two
-          var (prevC, currId, currC, havePair, haveCurr) =
-            state.getOption.getOrElse((0L, 0L, 0L, false, false))
-          val out = scala.collection.mutable.ArrayBuffer[PeakRow]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            val c = java.math.BigDecimal.valueOf(e.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            if (haveCurr) {
-              if (havePair && currC > prevC && currC >= c)
-                out += PeakRow(uid, currId, currC, currC - prevC,
-                  currC - c)
-              prevC = currC; havePair = true
-            }
-            currId = e.event_id; currC = c; haveCurr = true
-          }
-          state.update((prevC, currId, currC, havePair, haveCurr))
-          out.iterator
-      }
+    // (prevCents, currId, currCents, havePair, haveCurr):
+    // haveCurr after one point, havePair after two
+    fold(evs(events), byUser, Some(byId))((0L, 0L, 0L, false, false)) {
+      case (uid, (prevC, currId, currC, havePair, haveCurr), e) =>
+        val c = cents(e.value)
+        val peak =
+          if (haveCurr && havePair && currC > prevC && currC >= c)
+            Some(PeakRow(uid, currId, currC, currC - prevC, currC - c))
+          else None
+        (if (haveCurr) (currC, e.event_id, c, true, true)
+         else (prevC, e.event_id, c, havePair, true), peak)
+    }
   }
 
   case class LatchRow(user_id: Long, event_id: Long, cents: Long,
@@ -2503,28 +2105,13 @@ object ReactiveStreams {
       : Dataset[LatchRow] = {
     require(loCents < hiCents, "hysteresis needs lo < hi")
     import spark.implicits._
-    events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Boolean, LatchRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[Boolean]) =>
-          var on = state.getOption.getOrElse(false)
-          val out = scala.collection.mutable.ArrayBuffer[LatchRow]()
-          rows.toSeq.sortBy(_.event_id).foreach { e =>
-            val c = java.math.BigDecimal.valueOf(e.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            if (!on && c >= hiCents) {
-              on = true; out += LatchRow(uid, e.event_id, c, "on")
-            } else if (on && c <= loCents) {
-              on = false; out += LatchRow(uid, e.event_id, c, "off")
-            }
-          }
-          state.update(on)
-          out.iterator
-      }
+    fold(evs(events), byUser, Some(byId))(false) { (uid, on, e) =>
+      val c = cents(e.value)
+      if (!on && c >= hiCents) (true, Some(LatchRow(uid, e.event_id, c, "on")))
+      else if (on && c <= loCents)
+        (false, Some(LatchRow(uid, e.event_id, c, "off")))
+      else (on, None)
+    }
   }
 
   case class UserDay(user_id: Long, day: Long)
@@ -2542,22 +2129,10 @@ object ReactiveStreams {
   def userDayStream(spark: SparkSession, events: DataFrame)
       : Dataset[UserDay] = {
     import spark.implicits._
-    events
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Set[Long], UserDay](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[Set[Long]]) =>
-          var seen = state.getOption.getOrElse(Set.empty[Long])
-          val out = scala.collection.mutable.ArrayBuffer[UserDay]()
-          rows.foreach { e =>
-            val day = e.ts.getTime / 86400000L
-            if (!seen(day)) { seen += day; out += UserDay(uid, day) }
-          }
-          state.update(seen)
-          out.iterator
-      }
+    fold(evs(events), byUser, None)(Set.empty[Long]) { (uid, seen, e) =>
+      val day = e.ts.getTime / 86400000L
+      if (seen(day)) (seen, None) else (seen + day, Some(UserDay(uid, day)))
+    }
   }
 
   /** Bounded cohort-retention tail over [[userDayStream]]'s sink:

@@ -156,4 +156,20 @@ class Round13Spec extends AnyFunSuite {
     assert(vD.toSeq === vX.toSeq, "axis diverges across the cutoff")
     assert(vD.nonEmpty)
   }
+
+  test("cutoff boundary: pcaAxis agrees across paths when a quantized " +
+      "sum passes 2^63") {
+    // each row's coordinate quantizes to ~5e18 (fits a Long); three
+    // of them sum past Long.MaxValue, which only DECIMAL(38,0) holds
+    val embs = Seq(
+      (1L, Seq(5e12f, 1f)), (2L, Seq(5e12f, 2f)), (3L, Seq(5e12f, 4f)))
+      .toDF("vec_id", "embedding")
+    val (muD, vD) = DriverCutoff.withBudget(DriverCutoff.budgetBytes)(
+      Similarity.pcaAxis(embs, iters = 3))
+    val (muX, vX) = DriverCutoff.withBudget(0L)(
+      Similarity.pcaAxis(embs, iters = 3))
+    assert(muD.toSeq === muX.toSeq, "means diverge across the cutoff")
+    assert(vD.toSeq === vX.toSeq, "axis diverges across the cutoff")
+    assert(math.abs(muX(0) / 5e12 - 1) < 1e-6, "the exact mean is ~5e12")
+  }
 }

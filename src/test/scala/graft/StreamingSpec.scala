@@ -5,7 +5,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.streaming.ReactiveStreams
 import graft.streaming.ReactiveStreams.Ev
@@ -1782,5 +1784,117 @@ class StreamingSpec extends AnyFunSuite {
       q.stop()
       spark.conf.set(ccKey, prevCc)
     }
+  }
+
+  /** Waits until the query's (single) state store holds `expected`
+    * rows: progress is reported just after processAllAvailable
+    * returns, so the last batch's count is polled. */
+  private def awaitStateRows(
+      q: org.apache.spark.sql.streaming.StreamingQuery,
+      expected: Long): Unit =
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert(q.lastProgress.stateOperators(0).numRowsTotal === expected)
+    }
+
+  test("evicting operators drop a key's state once the watermark " +
+      "passes its deadline") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "sessionCappedStream" ->
+        (df => ReactiveStreams.sessionCappedStream(spark, df).toDF()),
+      "rateLimitStream" ->
+        (df => ReactiveStreams.rateLimitStream(spark, df).toDF()),
+      "debounce" -> (df => ReactiveStreams.debounce(spark, df).toDF()),
+      "timeoutDetect" ->
+        (df => ReactiveStreams.timeoutDetect(spark, df).toDF()))
+    for ((name, op) <- ops) withClue(name) {
+      val mem = MemoryStream[Ev]
+      val q = op(mem.toDF()).writeStream.format("memory")
+        .queryName(s"evict_${System.nanoTime()}").outputMode("append")
+        .start()
+      try {
+        mem.addData(Ev(1, ts(0), 1, "m", 1.0), Ev(2, ts(1), 2, "m", 2.0))
+        q.processAllAvailable()
+        awaitStateRows(q, 2)
+        // key 99 moves the watermark days past the deadlines of keys
+        // 1 and 2; its own deadline lies ahead of the watermark
+        mem.addData(Ev(90, ts(5000), 99, "m", 0.0)); q.processAllAvailable()
+        mem.addData(Ev(91, ts(5001), 99, "m", 0.0)); q.processAllAvailable()
+        awaitStateRows(q, 1)
+      } finally q.stop()
+    }
+  }
+
+  test("timeoutDetect keeps watching when a trigger brings only older " +
+      "events") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val mem = MemoryStream[Ev]
+    val qName = s"to_old_${System.nanoTime()}"
+    val q = ReactiveStreams.timeoutDetect(spark, mem.toDF(),
+      gapMs = 20 * 60000L).writeStream
+      .format("memory").queryName(qName).outputMode("append").start()
+    try {
+      mem.addData(Ev(5, ts(10), 1, "m", 0.0)); q.processAllAvailable()
+      // above the watermark but older than the watched event: the
+      // watch, and its timer, stay on event 5
+      mem.addData(Ev(3, ts(5), 1, "m", 0.0)); q.processAllAvailable()
+      mem.addData(Ev(900, ts(100000), 99, "tick", 0.0)); q.processAllAvailable()
+      mem.addData(Ev(901, ts(200000), 99, "tick", 0.0)); q.processAllAvailable()
+      val got = spark.table(qName).collect()
+        .filter(_.getAs[Long]("user_id") == 1L)
+        .map(r => (r.getAs[Long]("last_event_id"), r.getAs[Long]("last_ts_ms")))
+        .toSeq
+      assert(got === Seq((5L, ts(10).getTime)))
+    } finally q.stop()
+  }
+
+  test("RocksDB state store: sessionCappedStream eviction agrees with " +
+      "the default provider") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    def run(): Set[(Long, Long, Long, Long)] = {
+      val mem = MemoryStream[Ev]
+      val qName = s"rocks_sess_${System.nanoTime()}"
+      val q = ReactiveStreams.sessionCappedStream(spark, mem.toDF(),
+          gapMs = 30 * 60000L, capMs = 120 * 60000L)
+        .toDF().writeStream.format("memory").queryName(qName)
+        .outputMode("append").start()
+      try {
+        mem.addData(Ev(1, ts(0), 1, "m", 0), Ev(2, ts(0), 2, "m", 0))
+        q.processAllAvailable()
+        // key 1's session continues across the trigger (20 < 30 min)
+        mem.addData(Ev(3, ts(20), 1, "m", 0)); q.processAllAvailable()
+        awaitStateRows(q, 2)
+        // the watermark passes the deadlines of keys 1 and 2
+        mem.addData(Ev(90, ts(5000), 99, "wm", 0)); q.processAllAvailable()
+        mem.addData(Ev(91, ts(5001), 99, "wm", 0)); q.processAllAvailable()
+        awaitStateRows(q, 1)
+        mem.addData(Ev(4, ts(6000), 1, "m", 0)); q.processAllAvailable()
+        spark.table(qName).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          .toSet
+      } finally q.stop()
+    }
+    val default = run()
+    val prev = spark.conf.getOption(
+      "spark.sql.streaming.stateStore.providerClass")
+    GraftSession.useRocksDBStateStore(spark)
+    try assert(run() === default)
+    finally {
+      prev match {
+        case Some(p) => spark.conf.set(
+          "spark.sql.streaming.stateStore.providerClass", p)
+        case None => spark.conf.unset(
+          "spark.sql.streaming.stateStore.providerClass")
+      }
+      spark.conf.unset("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled")
+    }
+    assert(default.collect { case (1L, 3L, _, ss) => ss } ===
+      Set(ts(0).getTime), "cross-trigger continuation broke")
+    assert(default.collect { case (1L, 4L, _, ss) => ss } ===
+      Set(ts(6000).getTime), "post-eviction reopen broke")
   }
 }
